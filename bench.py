@@ -293,7 +293,7 @@ def main() -> None:
     def run_pipeline() -> float:
         t0 = time.perf_counter()
         result = pl.build_snapshot(
-            spark, bdf, ldf, cdf, odf, top_n=50, collect_counters=False
+            spark, bdf, ldf, cdf, odf, top_n=50
         )
         # One action materializing every table: a union of per-table
         # counts still executes each rollup's full shuffle but avoids

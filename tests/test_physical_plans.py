@@ -44,7 +44,6 @@ def snapshot(spark):
         catalog=spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA),
         overrides=spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
         top_n=5,
-        collect_counters=False,
     )
     yield result
     result.unpersist()
@@ -71,13 +70,12 @@ def test_dim_joins_broadcast(spark, snapshot):
     maps = deck_ops.catalog_maps(
         spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA)
     )
-    core_plan = _plan(
-        pipeline.participant_rows(
-            spark.createDataFrame(battles, BATTLE_SCHEMA),
-            maps,
-            spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
-        )
+    core, _ = pipeline.participant_rows(
+        spark.createDataFrame(battles, BATTLE_SCHEMA),
+        maps,
+        spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
     )
+    core_plan = _plan(core)
     assert core_plan.count("BroadcastHashJoin") >= 2, core_plan  # overrides ×2
     assert "SortMergeJoin" not in core_plan, "override join fell back to shuffle"
 
@@ -138,7 +136,8 @@ def test_participants_single_shuffle_lineage(spark):
     maps = deck_ops.catalog_maps(
         spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA)
     )
-    plan = _plan(pipeline.participant_rows(bdf, maps, odf))
+    core, _ = pipeline.participant_rows(bdf, maps, odf)
+    plan = _plan(core)
     shuffles = re.findall(r"[+:]- Exchange", plan)
     assert len(shuffles) == 1, f"expected 1 shuffle in participant core:\n{plan}"
 
@@ -154,25 +153,25 @@ def test_checkpointed_core_is_bare_scan(snapshot):
 
 
 def test_scan_counters_report_is_relational(spark):
-    """E7 counters: no Python nodes, one row per counter."""
+    """E7 counters: the participant lineage ``build_snapshot``
+    checkpoints carries one CollectMetrics node per counter, and no
+    Python nodes, so the counters ride the checkpoint job in codegen."""
+    from topn_clashroyal_etl_sql_snapshot_spark.operators import deck as deck_ops
+
     leaderboard, battles, overrides = generate_fixture()
-    rep = pipeline.scan_counters_report(
-        spark.createDataFrame(battles, BATTLE_SCHEMA),
-        spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA),
+    maps = deck_ops.catalog_maps(
+        spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA)
     )
-    assert "BatchEvalPython" not in _plan(rep)
-    rows = {r["counter"]: r["value"] for r in rep.collect()}
-    assert set(rows) == {
-        "scanned_entries",
-        "ranked_1v1",
-        "deduped_matches",
-        "valid_battles",
-        "stream_deduped_matches",
-    }
-    assert rows["scanned_entries"] >= rows["ranked_1v1"] >= rows["deduped_matches"]
-    # the streaming-visible subset (parseable battleTime) can't exceed
-    # the batch dedup count
-    assert rows["deduped_matches"] >= rows["stream_deduped_matches"]
+    core, observed = pipeline.participant_rows(
+        spark.createDataFrame(battles, BATTLE_SCHEMA),
+        maps,
+        spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
+    )
+    assert tuple(observed) == pipeline.E7_COUNTERS
+    plan = _plan(core)
+    assert plan.count("CollectMetrics (") == len(pipeline.E7_COUNTERS), plan
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
 
 
 def test_asof_join_single_exchange(spark):

@@ -38,10 +38,27 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
 
 
-def test_counters(snapshot):
+def test_counters(spark, snapshot):
+    """All five E7 counters equal the oracle's and are plain values
+    observed during the build: reading them starts no Spark job."""
     result, oracle = snapshot
-    assert result.counters["deduped_matches"] == oracle["deduped_matches"]
-    assert result.counters["scanned_entries"] > oracle["deduped_matches"]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("read_counters", "reading result.counters")
+    try:
+        got = dict(result.counters)
+        assert tracker.getJobIdsForGroup("read_counters") == []
+        # the probe does see a job started in its group
+        spark.range(1).count()
+        assert tracker.getJobIdsForGroup("read_counters")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == oracle["counters"]
+    assert got["scanned_entries"] >= got["ranked_1v1"] >= got["deduped_matches"]
+    assert got["deduped_matches"] >= got["valid_battles"]
+    # the streaming-visible subset (parseable battleTime) can't exceed
+    # the batch dedup count
+    assert got["deduped_matches"] >= got["stream_deduped_matches"]
 
 
 def test_player_dim(snapshot):
@@ -181,6 +198,153 @@ def test_validation_suite_green(snapshot):
     checks = validate.run_all(result.tables, expected_top_n=TOP_N)
     failures = [c for c in checks if not c.passed]
     assert not failures, failures
+
+
+def _healthy_warehouse() -> dict[str, list[tuple]]:
+    """A minimal warehouse that passes every G check with
+    ``expected_top_n=2``: top-N uses 60, meta uses 100 (60 ≤ 100 ≤ 120),
+    no 'unknown' type, every FK resolved, 8 cards per deck."""
+    cards = range(26000000, 26000008)
+    return {
+        "deck_types": [("Cycle",), ("Beatdown",)],
+        "player": [("#P1", "a", 7000, 1), ("#P2", "b", 6900, 2)],
+        "decks": [("d1", "Cycle"), ("d2", "Beatdown")],
+        "deck_cards": [
+            (dh, cid, "normal", slot)
+            for dh in ("d1", "d2")
+            for slot, cid in enumerate(cards)
+        ],
+        "player_decks": [("#P1", "d1", 30, 15), ("#P2", "d2", 30, 10)],
+        "meta_deck_types": [("Cycle", 50, 25), ("Beatdown", 50, 20)],
+        "meta_type_deck_ids": [("Cycle", "d1", 50, 25), ("Beatdown", "d2", 50, 20)],
+        "meta_type_cards": [("Cycle", 26000000, "normal", 50, 25)],
+        "player_type_cards": [("#P1", "Cycle", 26000000, "normal", 30, 15)],
+        "meta_type_matchups": [
+            ("Cycle", "Beatdown", 50, 25),
+            ("Beatdown", "Cycle", 50, 20),
+        ],
+    }
+
+
+def _wins_above_uses(table):
+    def plant(wh):
+        *keys, uses, _ = wh[table][0]
+        wh[table][0] = (*keys, uses, uses + 1)
+
+    return plant
+
+
+def _add_row(table, row):
+    return lambda wh: wh[table].append(row)
+
+
+def _zero_topn(wh):
+    wh["player_decks"] = [(t, dh, 0, 0) for t, dh, _, _ in wh["player_decks"]]
+
+
+def _empty_meta(wh):
+    # a positive top-N sum over an empty meta would also break G5, so
+    # the top-N uses go to 0 as well (0 ≤ 0 ≤ 0 holds)
+    wh["meta_deck_types"] = []
+    _zero_topn(wh)
+
+
+# (case id, the one check the plant must flip, plant)
+_PLANTED = [
+    ("g1_7_card_deck", "deck_cards_8_rows", lambda wh: wh["deck_cards"].pop()),
+    *[
+        (f"g2_{t}", f"wins_uses_sanity:{t}", _wins_above_uses(t))
+        for t in validate.STATS_TABLES
+    ],
+    ("g3_empty_meta", "non_empty_meta", _empty_meta),
+    (
+        "g4_unknown_31pct",
+        "unknown_ratio",
+        lambda wh: wh.update(
+            meta_deck_types=[("Cycle", 69, 30), ("unknown", 31, 10)]
+        ),
+    ),
+    ("g5_zero_topn_uses", "topn_meta_bound", _zero_topn),
+    (
+        "g6_player_count_off_by_one",
+        "player_count",
+        _add_row("player", ("#P3", "c", 6800, 3)),
+    ),
+    *[
+        (
+            f"fk_{child}_{ck}",
+            f"fk:{child}.{ck}->{parent}.{pk}",
+            plant,
+        )
+        for (child, ck, parent, pk), plant in zip(
+            validate.FK_EDGES,
+            [
+                lambda wh: wh["deck_cards"].extend(
+                    ("dX", 26000000 + i, "normal", i) for i in range(8)
+                ),
+                _add_row("player_decks", ("#P1", "dX", 1, 0)),
+                _add_row("player_decks", ("#PX", "d1", 1, 0)),
+                _add_row("decks", ("d3", "Siege")),
+                _add_row("meta_type_deck_ids", ("Cycle", "dX", 1, 0)),
+            ],
+        )
+    ],
+]
+
+
+def _tables(spark, wh, memo=None):
+    """The warehouse ``wh`` as DataFrames, built from pandas (Arrow) as
+    local relations: the suite runs in fewer jobs than over
+    parallelized Python rows. ``memo`` shares one DataFrame per
+    (table, rows) across calls, so planted cases reuse the untouched
+    tables instead of rebuilding them."""
+    import pandas as pd
+
+    from topn_clashroyal_etl_sql_snapshot_spark.sources.schemas import (
+        WAREHOUSE_SCHEMAS,
+    )
+
+    memo = {} if memo is None else memo
+    for name, rows in wh.items():
+        key = (name, tuple(rows))
+        if key not in memo:
+            memo[key] = spark.createDataFrame(
+                pd.DataFrame(rows, columns=WAREHOUSE_SCHEMAS[name].names),
+                WAREHOUSE_SCHEMAS[name],
+            )
+    return {name: memo[(name, tuple(rows))] for name, rows in wh.items()}
+
+
+def test_validation_suite_healthy_baseline(spark):
+    """The planting base passes every check, and every check of the
+    suite has exactly one planted case below."""
+    results = validate.run_all(_tables(spark, _healthy_warehouse()), expected_top_n=2)
+    assert [c for c in results if not c.passed] == []
+    assert sorted(c.name for c in results) == sorted(c for _, c, _ in _PLANTED)
+    assert all(c.detail == "0 violations" for c in results)
+
+
+def test_validation_suite_flags_planted_violation(spark):
+    """One planted violation flips exactly its own check. The cases'
+    reports are tagged with their case id and collected as one union,
+    so the whole table of cases costs one suite's worth of jobs."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    reports, memo = [], {}
+    for case, _, plant in _PLANTED:
+        wh = _healthy_warehouse()
+        plant(wh)
+        report = validate.validation_report(
+            _tables(spark, wh, memo), expected_top_n=2
+        )
+        reports.append(report.select(F.lit(case).alias("case"), "*"))
+    failed: dict[str, list[str]] = {}
+    for r in reduce(DataFrame.unionAll, reports).filter(~F.col("passed")).collect():
+        failed.setdefault(r["case"], []).append(r["check_name"])
+    assert failed == {case: [check] for case, check, _ in _PLANTED}
 
 
 def test_catalog_smoke(spark):

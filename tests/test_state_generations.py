@@ -510,12 +510,11 @@ def test_publish_expected_parent_must_name_a_gen_of_this_root(
     assert sink.current_generation(root) == g5
 
 
-def test_atomic_dir_publish_durable_opt_out(tmp_path):
-    """r15 advisor finding: the dir-swap publish fsynced every staged
-    file with no in-code opt-out — an unbounded per-publish latency
-    for full-warehouse callers. ``durable=False`` skips the per-file
-    walk but keeps the stage-and-swap semantics byte-for-byte: same
-    published contents, same crash-ordering recovery discipline."""
+def test_atomic_dir_publish_swap_and_restore(tmp_path):
+    """The dir-swap publish: each publish serves the new contents,
+    leaves no ``__staging``/``__old`` behind, and a generation parked
+    at ``__old`` (crash between the two renames) is restored before
+    re-staging."""
     base = str(tmp_path / "snap")
 
     def write_v(tag):
@@ -525,19 +524,19 @@ def test_atomic_dir_publish_durable_opt_out(tmp_path):
                 f.write(tag)
         return _w
 
-    sink.atomic_dir_publish(base, write_v("v1"), durable=False)
+    sink.atomic_dir_publish(base, write_v("v1"))
     with open(os.path.join(base, "data.txt")) as f:
         assert f.read() == "v1"
     # overwrite publish still swaps completely and cleans up
-    sink.atomic_dir_publish(base, write_v("v2"), durable=False)
+    sink.atomic_dir_publish(base, write_v("v2"))
     with open(os.path.join(base, "data.txt")) as f:
         assert f.read() == "v2"
     assert not os.path.exists(base + "__staging")
     assert not os.path.exists(base + "__old")
     # a run parked at __old (crash between the two renames) is still
-    # restored before re-staging — recovery is independent of durable
+    # restored before re-staging
     os.rename(base, base + "__old")
-    sink.atomic_dir_publish(base, write_v("v3"), durable=False)
+    sink.atomic_dir_publish(base, write_v("v3"))
     with open(os.path.join(base, "data.txt")) as f:
         assert f.read() == "v3"
 

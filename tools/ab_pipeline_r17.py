@@ -2,9 +2,10 @@
 """r17 A/B (r16 verdict #3): shared-grain rollups vs the per-rollup
 fan-out in build_snapshot, timed with the bench's exact cr_pipeline
 methodology (sf-proportional synthetic battles, one union-of-counts
-action over all 12 tables, collect_counters=False), interleaved
-alternating-order in ONE session so both variants sample the same box
-minutes apart.
+action over all 12 tables), interleaved alternating-order in ONE
+session so both variants sample the same box minutes apart. An old
+revision from before the E7 counters rode the checkpoint job also
+pays its two eager counter actions.
 
 Usage: git show <old-rev>:<pipeline.py> > /tmp/pipeline_old_r17.py
        python tools/ab_pipeline_r17.py
@@ -65,7 +66,7 @@ def main() -> None:
     def run(pl) -> float:
         t0 = time.perf_counter()
         result = pl.build_snapshot(
-            spark, bdf, ldf, cdf, odf, top_n=50, collect_counters=False
+            spark, bdf, ldf, cdf, odf, top_n=50
         )
         counts = [
             df.agg(F.count(F.lit(1)).alias("n"))
@@ -77,10 +78,8 @@ def main() -> None:
         return dt
 
     # parity: every table equal row-for-row (sorted tuples)
-    ra = old_pl.build_snapshot(spark, bdf, ldf, cdf, odf, top_n=50,
-                               collect_counters=False)
-    rb = new_pl.build_snapshot(spark, bdf, ldf, cdf, odf, top_n=50,
-                               collect_counters=False)
+    ra = old_pl.build_snapshot(spark, bdf, ldf, cdf, odf, top_n=50)
+    rb = new_pl.build_snapshot(spark, bdf, ldf, cdf, odf, top_n=50)
     for name in ra.tables:
         ta = sorted(map(tuple, ra.tables[name].collect()))
         tb = sorted(map(tuple, rb.tables[name].collect()))

@@ -65,8 +65,8 @@ def main() -> int:
 
     # Summary (mirrors scripts/etl_snapshot_topn.py:347-358)
     print("\n[ETL] SUMMARY (pre-write)")
-    print(f"  battle entries scanned:     {result.counters['scanned_entries']}")
-    print(f"  deduped matches counted:    {result.counters['deduped_matches']}")
+    for name, value in result.counters.items():
+        print(f"  {name + ':':<28}{value}")
     print(f"  unique decks:               {result.tables['decks'].count()}")
     print(f"  player_decks rows (TopN):   {result.tables['player_decks'].count()}")
     print(f"  type matchups rows:         {result.tables['meta_type_matchups'].count()}")
@@ -90,6 +90,7 @@ def main() -> int:
     }
     checks = validate.run_all(tables, expected_top_n=args.top_n)
     failed = [c for c in checks if not c.passed]
+    print("\n[VALIDATE] G1-G6 + FK checks")
     for c in checks:
         print(f"  [{'OK' if c.passed else 'FAIL'}] {c.name}: {c.detail}")
     if failed:

@@ -39,33 +39,31 @@ TOP_N = 8  # matches tools/make_fixtures.py
 # if the old session was garbage collected and its id() reused.
 import weakref
 
-_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+_CACHE: "weakref.WeakKeyDictionary[SparkSession, pl.SnapshotResult]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def snapshot_tables(spark: SparkSession) -> dict[str, DataFrame]:
+def snapshot_result(spark: SparkSession) -> pl.SnapshotResult:
     key = spark
     if key not in _CACHE:
-        result = pl.build_snapshot(
+        _CACHE[key] = pl.build_snapshot(
             spark,
-            battles=readers.read_battles_json(
-                spark, os.path.join(FIXTURE_DIR, "battles.jsonl")
-            ),
+            battles=_battles(spark),
             leaderboard=readers.read_leaderboard_json(
                 spark, os.path.join(FIXTURE_DIR, "leaderboard.jsonl")
             ),
-            catalog=readers.read_card_catalog(
-                spark, os.path.join(FIXTURE_DIR, "card_catalog.json")
-            ),
+            catalog=_catalog(spark),
             overrides=readers.read_overrides(
                 spark, os.path.join(FIXTURE_DIR, "overrides.parquet")
             ),
             top_n=TOP_N,
-            collect_counters=False,
         )
-        _CACHE[key] = result.tables
     return _CACHE[key]
+
+
+def snapshot_tables(spark: SparkSession) -> dict[str, DataFrame]:
+    return snapshot_result(spark).tables
 
 
 def _wh(table: str) -> str:
@@ -426,10 +424,13 @@ def cr_e8_library_summary(spark, sf_dir):
 def cr_e7_scan_counters(spark, sf_dir):
     """E7 scan counters (scripts:249,261) as a relational report:
     entries scanned / ranked kept / matches after dedup / battles
-    surviving validation. Oracle = counts recorded by the Python oracle
-    ETL over the same fixtures."""
-    return pl.scan_counters_report(_battles(spark), _catalog(spark)).orderBy(
-        "counter"
+    surviving validation / deduped matches visible to the streaming
+    twin — the counters the cached pipeline build observed on its
+    checkpoint job. Oracle = counts recorded by the Python oracle ETL
+    over the same fixtures."""
+    return spark.createDataFrame(
+        sorted(snapshot_result(spark).counters.items()),
+        "counter string, value long",
     )
 
 

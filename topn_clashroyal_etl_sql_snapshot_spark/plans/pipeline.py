@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs
@@ -78,6 +78,15 @@ def _uses_wins():
         F.sum(F.col("won").cast("long")).alias("wins"),
     ]
 
+
+# E7 scan counters, in pipeline order (see :func:`participant_rows`).
+E7_COUNTERS = (
+    "scanned_entries",
+    "ranked_1v1",
+    "deduped_matches",
+    "valid_battles",
+    "stream_deduped_matches",
+)
 
 MAX_LEADERBOARD_ROWS = 1000  # one API page — the REST source's hard cap
 
@@ -134,15 +143,15 @@ def ranked_battles(battles: DataFrame) -> DataFrame:
     )
 
 
-def deduped_battles(battles: DataFrame) -> DataFrame:
-    """B9 match hash + D2 dedup.
+def deduped_battles(ranked: DataFrame) -> DataFrame:
+    """B9 match hash + D2 dedup of :func:`ranked_battles` rows.
 
     Reference keeps the first-in-scan-order copy (scripts:257-261).
     Spark has no scan order; we make the pick deterministic by ordering
     copies on their full serialized content. One shuffle on match_hash
     (high-cardinality content hash → uniform distribution).
     """
-    hashed = ranked_battles(battles).withColumn(
+    hashed = ranked.withColumn(
         "match_hash",
         exprs.match_hash(
             F.col("battleTime"),
@@ -187,59 +196,50 @@ def extracted_battles(deduped: DataFrame, maps: dict) -> DataFrame:
     )
 
 
-def scan_counters_report(battles: DataFrame, catalog: DataFrame) -> DataFrame:
-    """E7 scan counters (scripts:249,261 accounting) as a relational
-    (counter, value) report — the driver-checkable twin of the
-    ``SnapshotResult.counters`` dict (which ``build_snapshot`` collects
-    eagerly for CLI logging). ``valid_battles`` additionally counts
-    battles surviving structural/deck validation;
-    ``stream_deduped_matches`` counts the deduped matches whose
-    battleTime parses as the streaming watermark event time — the batch
-    statement of what the Structured Streaming dedup twin
-    (streaming/incremental.streaming_dedup_matches) must reproduce."""
-    from ..streaming.incremental import parse_battle_time
-
-    maps = deck_ops.catalog_maps(catalog)
-    ranked = ranked_battles(battles)
-    deduped = deduped_battles(battles)
-    extracted = extracted_battles(deduped, maps)
-    stream_visible = deduped.filter(
-        parse_battle_time(F.col("battleTime")).isNotNull()
-    )
-
-    def one(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).cast("long").alias("value")).select(
-            F.lit(name).alias("counter"), "value"
-        )
-
-    return (
-        one("scanned_entries", battles)
-        .unionAll(one("ranked_1v1", ranked))
-        .unionAll(one("deduped_matches", deduped))
-        .unionAll(one("valid_battles", extracted))
-        .unionAll(one("stream_deduped_matches", stream_visible))
-    )
-
-
 def participant_rows(
-    battles: DataFrame,
-    maps: dict,
-    overrides: DataFrame,
-    deduped: DataFrame | None = None,
-) -> DataFrame:
+    battles: DataFrame, maps: dict, overrides: DataFrame
+) -> tuple[DataFrame, dict[str, Observation]]:
     """The LAZY participant-grain construction: ranked filter → match
     dedup → extraction/validation → B8 hash + C1-C3 classify (override
     beats classifier, broadcast left joins) → D1 unpivot (each deduped
     battle → 2 participant observations, scripts:304-310; side index
     keeps first-seen ordering deterministic downstream; each row also
     carries the OPPONENT's deck type so every table — including the E6
-    matchup matrix — derives from this one frame). ``build_snapshot``
-    materializes it once (localCheckpoint) before the table fan-out;
-    exposed separately so plan pins can assert the lineage shape (one
-    content-hash shuffle, dims via BroadcastExchange only)."""
-    if deduped is None:
-        deduped = deduped_battles(battles)
-    extracted = extracted_battles(deduped, maps)
+    matchup matrix — derives from this one frame).
+
+    Also returns the E7 scan counters (scripts:249,261 accounting) as
+    one ``Observation`` per name in :data:`E7_COUNTERS`, filled by the
+    first action that runs the frame: ``scanned_entries``,
+    ``ranked_1v1`` (B1 survivors), ``deduped_matches`` (counted BEFORE
+    deck validation, as the reference does: dedup at scripts:257-261,
+    discards at :279-282), ``valid_battles`` and
+    ``stream_deduped_matches`` (deduped matches whose battleTime parses
+    as the watermark event time — what the Structured Streaming dedup
+    twin must reproduce). The stages form one linear lineage (the
+    override joins broadcast the overrides, not the battles), so each
+    observe sees every row of its stage exactly once.
+
+    ``build_snapshot`` materializes the frame once (localCheckpoint)
+    before the table fan-out; exposed separately so plan pins can assert
+    the lineage shape (one content-hash shuffle, dims via
+    BroadcastExchange only)."""
+    from ..streaming.incremental import parse_battle_time
+
+    observed = {k: Observation() for k in E7_COUNTERS}
+
+    def counted(df: DataFrame, counter: str, n=None) -> DataFrame:
+        n = F.count(F.lit(1)) if n is None else n
+        return df.observe(observed[counter], n.alias("n"))
+
+    ranked = counted(
+        ranked_battles(counted(battles, "scanned_entries")), "ranked_1v1"
+    )
+    deduped = counted(
+        counted(deduped_battles(ranked), "deduped_matches"),
+        "stream_deduped_matches",
+        F.count_if(parse_battle_time(F.col("battleTime")).isNotNull()),
+    )
+    extracted = counted(extracted_battles(deduped, maps), "valid_battles")
 
     # --- B8 hash + C1-C3 classify (override beats classifier) -----------
     def _names(obs_col: str):
@@ -286,7 +286,7 @@ def participant_rows(
         .withColumn("opp_won", F.col("opp_crowns") > F.col("team_crowns"))
     )
 
-    return battles_core.select(
+    participants = battles_core.select(
         "match_hash",
         "battleTime",
         F.inline(
@@ -312,6 +312,7 @@ def participant_rows(
             )
         ),
     )
+    return participants, observed
 
 
 def build_snapshot(
@@ -324,24 +325,14 @@ def build_snapshot(
     collect_counters: bool = True,
 ) -> SnapshotResult:
     """Run the full snapshot ETL; returns all 11 warehouse tables as
-    (lazy) DataFrames sharing one persisted participant core.
-
-    ``collect_counters=False`` skips the E7 scan counters (two extra
-    actions) — use for latency-sensitive runs; the tables are unaffected.
-    """
+    (lazy) DataFrames sharing one materialized participant core, and the
+    E7 scan counters of :func:`participant_rows`. The counters are read
+    from the core's checkpoint job: no extra action, and reading them
+    starts no job. ``collect_counters`` therefore has no effect; it is
+    kept only because ``perfbench/workloads.py`` passes it."""
     maps = deck_ops.catalog_maps(catalog)
 
     player = top_players_df(leaderboard, top_n)
-
-    # E7 counter (scripts:249) — raw battlelog entries scanned
-    scanned_entries = battles.count() if collect_counters else -1
-
-    deduped = deduped_battles(battles)
-
-    # E7 counter (scripts:261) — counted BEFORE structural/deck validation,
-    # matching the reference's accounting (dedup happens at scripts:257-261,
-    # battles can still be discarded later at :279-282).
-    deduped_matches = deduped.count() if collect_counters else -1
 
     # --- D1 unpivot to participant grain + materialize -------------------
     # localCheckpoint, not persist (r17, guide §3.3 "materialising an
@@ -359,9 +350,9 @@ def build_snapshot(
     # The lazy construction lives in :func:`participant_rows` so the
     # physical-plan pins (single shuffle, broadcast dims) can still see
     # the pre-checkpoint lineage.
-    participants = participant_rows(
-        battles, maps, overrides, deduped=deduped
-    ).localCheckpoint(eager=True)
+    core, observed = participant_rows(battles, maps, overrides)
+    participants = core.localCheckpoint(eager=True)
+    counters = {k: int(o.get["n"]) for k, o in observed.items()}
 
     # --- shared rollup grains (r17, guide §2.3/§2.4) ----------------------
     # The E-family rollups all group by subsets of two grains, and each
@@ -532,10 +523,6 @@ def build_snapshot(
         "meta_type_cards": meta_type_cards,
         "player_type_cards": player_type_cards,
         "meta_type_matchups": meta_type_matchups,
-    }
-    counters = {
-        "scanned_entries": scanned_entries,
-        "deduped_matches": deduped_matches,
     }
     return SnapshotResult(
         tables=tables,

@@ -1,9 +1,11 @@
 """Validation suite: the reference's post-load invariant checks as
-DataFrame queries (G1-G6, ``/root/reference/scripts/validate_snapshot.py``).
+DataFrame queries (G1-G6, the reference's ``scripts/validate_snapshot.py``).
 
 Spark has no FK/CHECK DDL — integrity is enforced by *validation queries*,
-which is exactly how the reference's own validator works. Each check
-returns a ``CheckResult``; ``run_all`` aggregates pass/fail.
+which is exactly how the reference's own validator works. The suite has
+ONE definition, :func:`validation_report` (a relational result set the
+DuckDB oracle re-derives in SQL); :func:`run_all` is a single
+``collect()`` of it mapped to ``CheckResult``s for CLI reporting.
 """
 
 from __future__ import annotations
@@ -22,105 +24,20 @@ STATS_TABLES = (
     "meta_type_matchups",
 )
 
+FK_EDGES = [
+    ("deck_cards", "deck_hash", "decks", "deck_hash"),
+    ("player_decks", "deck_hash", "decks", "deck_hash"),
+    ("player_decks", "player_tag", "player", "player_tag"),
+    ("decks", "deck_type", "deck_types", "deck_type"),
+    ("meta_type_deck_ids", "deck_hash", "decks", "deck_hash"),
+]
+
 
 @dataclass
 class CheckResult:
     name: str
     passed: bool
     detail: str
-
-
-def check_deck_cards_integrity(deck_cards: DataFrame) -> CheckResult:
-    """G1: every deck_hash has exactly 8 rows (validate_snapshot.py:49-68)."""
-    bad = (
-        deck_cards.groupBy("deck_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") != 8)
-        .count()
-    )
-    return CheckResult("deck_cards_8_rows", bad == 0, f"{bad} decks with != 8 cards")
-
-
-def check_wins_uses_sanity(tables: dict[str, DataFrame]) -> list[CheckResult]:
-    """G2: 0 ≤ wins ≤ uses on every stats table (validate_snapshot.py:71-102)."""
-    out = []
-    for name in STATS_TABLES:
-        df = tables.get(name)
-        if df is None:
-            continue
-        bad = df.filter(
-            (F.col("wins") > F.col("uses")) | (F.col("wins") < 0) | (F.col("uses") < 0)
-        ).count()
-        out.append(
-            CheckResult(f"wins_uses_sanity:{name}", bad == 0, f"{bad} violating rows")
-        )
-    return out
-
-
-def check_non_empty_meta(meta_deck_types: DataFrame) -> CheckResult:
-    """G3: meta_deck_types non-empty (validate_snapshot.py:105-113)."""
-    n = meta_deck_types.count()
-    return CheckResult("non_empty_meta", n > 0, f"{n} rows")
-
-
-def check_unknown_ratio(
-    meta_deck_types: DataFrame, max_ratio: float = 0.30
-) -> CheckResult:
-    """G4: uses attributed to 'unknown'-labelled types ≤ max_ratio
-    (validate_snapshot.py:116-145; ILIKE → lower() equality)."""
-    row = meta_deck_types.agg(
-        F.coalesce(
-            F.sum(F.when(F.lower(F.col("deck_type")) == "unknown", F.col("uses"))),
-            F.lit(0),
-        ).alias("unknown"),
-        F.coalesce(F.sum("uses"), F.lit(0)).alias("total"),
-    ).first()
-    total = row["total"] or 0
-    ratio = (row["unknown"] / total) if total else 0.0
-    return CheckResult(
-        "unknown_ratio", ratio <= max_ratio, f"ratio={ratio:.3f} (max {max_ratio})"
-    )
-
-
-def check_topn_meta_bound(
-    player_decks: DataFrame, meta_deck_types: DataFrame
-) -> CheckResult:
-    """G5: topn_obs ≤ meta_obs ≤ 2×topn_obs (validate_snapshot.py:148-192).
-
-    Meta counts both sides of every match; player facts only TopN tags —
-    so the meta total is between 1× and 2× the TopN total (equality at 2×
-    when every participant is TopN).
-    """
-    topn = (player_decks.agg(F.coalesce(F.sum("uses"), F.lit(0))).first()[0]) or 0
-    meta = (meta_deck_types.agg(F.coalesce(F.sum("uses"), F.lit(0))).first()[0]) or 0
-    ok = topn <= meta <= 2 * topn if topn else meta >= 0
-    return CheckResult("topn_meta_bound", ok, f"topn={topn} meta={meta}")
-
-
-def check_player_count(player: DataFrame, expected_top_n: int) -> CheckResult:
-    """G6: player row count == --top-n (validate_snapshot.py:195-206)."""
-    n = player.count()
-    return CheckResult(
-        "player_count", n == expected_top_n, f"got {n}, expected {expected_top_n}"
-    )
-
-
-def check_fk_orphans(tables: dict[str, DataFrame]) -> list[CheckResult]:
-    """FK integrity as anti-joins (schema.sql FKs: deck_cards→decks/cards,
-    player_decks→player/decks, decks→deck_types). No DDL in Spark → an
-    orphan count per FK edge."""
-    out = []
-    for child, ck, parent, pk in FK_EDGES:
-        c, p = tables.get(child), tables.get(parent)
-        if c is None or p is None:
-            continue
-        orphans = c.join(
-            p.select(F.col(pk).alias(ck)).distinct(), ck, "left_anti"
-        ).count()
-        out.append(
-            CheckResult(f"fk:{child}.{ck}->{parent}.{pk}", orphans == 0, f"{orphans} orphans")
-        )
-    return out
 
 
 def check_catalog_smoke(spark) -> CheckResult:
@@ -132,21 +49,25 @@ def check_catalog_smoke(spark) -> CheckResult:
     return CheckResult("catalog_smoke", one == 1 and len(dbs) > 0, f"{len(dbs)} database(s)")
 
 
-FK_EDGES = [
-    ("deck_cards", "deck_hash", "decks", "deck_hash"),
-    ("player_decks", "deck_hash", "decks", "deck_hash"),
-    ("player_decks", "player_tag", "player", "player_tag"),
-    ("decks", "deck_type", "deck_types", "deck_type"),
-    ("meta_type_deck_ids", "deck_hash", "decks", "deck_hash"),
-]
-
-
 def validation_report(
     tables: dict[str, DataFrame], expected_top_n: int | None = None
 ) -> DataFrame:
-    """The G1-G6 suite as ONE relational result set:
-    (check_name, violations, passed) — the driver-checkable twin of
-    :func:`run_all` (which collects per-check counts for CLI reporting).
+    """The G1-G6 suite + FK integrity as ONE relational result set
+    (check_name, violations, passed), in this order (line refs are
+    validate_snapshot.py):
+
+    - G1 ``deck_cards_8_rows``: decks without 8 card rows (:49-68);
+    - G2 ``wins_uses_sanity:<t>``: rows breaking 0 ≤ wins ≤ uses, per
+      :data:`STATS_TABLES` entry present (:71-102);
+    - G3 ``non_empty_meta``: 1 if meta_deck_types is empty (:105-113);
+    - G4 ``unknown_ratio``: 1 if 'unknown' uses exceed 30% (:116-145);
+    - G5 ``topn_meta_bound``: 1 unless topn ≤ meta ≤ 2×topn summed
+      uses (:148-192) — zero TopN uses pass only with an empty meta;
+    - G6 ``player_count``: 1 unless the player dim has
+      ``expected_top_n`` rows; only when that is given (:195-206);
+    - ``fk:<child>.<col>-><parent>.<col>``: orphans per :data:`FK_EDGES`
+      edge whose tables are present (the DDL FKs as anti-joins).
+
     Every check is a small aggregate; the union is a single distributed
     plan with no driver-side logic. Ratio thresholds use integer
     arithmetic (unknown×10 ≤ 3×total) so the comparison is exact on any
@@ -261,13 +182,10 @@ def validation_report(
 
 
 def run_all(tables: dict[str, DataFrame], expected_top_n: int | None = None) -> list[CheckResult]:
-    results: list[CheckResult] = []
-    results.append(check_deck_cards_integrity(tables["deck_cards"]))
-    results.extend(check_wins_uses_sanity(tables))
-    results.append(check_non_empty_meta(tables["meta_deck_types"]))
-    results.append(check_unknown_ratio(tables["meta_deck_types"]))
-    results.append(check_topn_meta_bound(tables["player_decks"], tables["meta_deck_types"]))
-    if expected_top_n is not None:
-        results.append(check_player_count(tables["player"], expected_top_n))
-    results.extend(check_fk_orphans(tables))
-    return results
+    """The suite for CLI reporting: one ``collect()`` of
+    :func:`validation_report`, one ``CheckResult`` per check in report
+    order, with the violation count as the detail."""
+    return [
+        CheckResult(r["check_name"], r["passed"], f"{r['violations']} violations")
+        for r in validation_report(tables, expected_top_n).collect()
+    ]

@@ -34,32 +34,25 @@ import shutil
 from pyspark.sql import DataFrame
 
 
-def write_snapshot(
-    tables: dict[str, DataFrame],
-    warehouse_dir: str,
-    partition_keys: dict[str, list[str]] | None = None,
-) -> None:
-    """Write every table under ``warehouse_dir/<name>/`` in overwrite mode."""
-    default_partitioning = {
-        # read patterns filter by archetype (dashboard drill-down) —
-        # partition pruning replaces the reference's B-tree indexes
-        "meta_type_cards": ["deck_type"],
-        "meta_type_deck_ids": ["deck_type"],
-    }
-    pk = {**default_partitioning, **(partition_keys or {})}
+# Dashboard reads filter these by archetype — partition pruning replaces
+# the reference's B-tree indexes.
+PARTITION_KEYS = {
+    "meta_type_cards": ["deck_type"],
+    "meta_type_deck_ids": ["deck_type"],
+}
+
+
+def write_snapshot(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
+    """Write every table under ``warehouse_dir/<name>/`` in overwrite
+    mode, partitioned per :data:`PARTITION_KEYS`."""
     for name, df in tables.items():
         writer = df.write.mode("overwrite")
-        if name in pk:
-            writer = writer.partitionBy(*pk[name])
+        if name in PARTITION_KEYS:
+            writer = writer.partitionBy(*PARTITION_KEYS[name])
         writer.parquet(os.path.join(warehouse_dir, name))
 
 
-def write_snapshot_atomic(
-    tables: dict[str, DataFrame],
-    warehouse_dir: str,
-    partition_keys: dict[str, list[str]] | None = None,
-    durable: bool = True,
-) -> None:
+def write_snapshot_atomic(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
     """All-or-nothing parquet snapshot — the one-transaction load of the
     reference (``scripts/etl_snapshot_topn.py:363-364``) as a
     stage-and-swap: every table is written under
@@ -82,16 +75,12 @@ def write_snapshot_atomic(
     stores point readers through a catalog/manifest and publish by
     updating the pointer.
 
-    ``durable=True`` (default) fsyncs every staged file before the
-    swap so the published snapshot survives power loss; a huge local
-    warehouse can pass ``durable=False`` to skip the per-file walk
-    (crash-ordering guarantee kept; power-loss durability then owned
-    at the platform layer, e.g. one syncfs) — r15 advisor finding."""
+    Every staged file is fsynced before the swap, so the published
+    snapshot also survives power loss."""
     atomic_dir_publish(
         warehouse_dir,
-        lambda staging: write_snapshot(tables, staging, partition_keys),
+        lambda staging: write_snapshot(tables, staging),
         caller="write_snapshot_atomic",
-        durable=durable,
     )
 
 
@@ -208,7 +197,6 @@ def atomic_dir_publish(
     base_dir: str,
     write_fn,
     caller: str = "atomic publish",
-    durable: bool = True,
 ) -> None:
     """Stage-and-swap a directory-valued artifact: ``write_fn(staging)``
     writes the full new generation to ``<base>__staging``; only after
@@ -244,16 +232,8 @@ def atomic_dir_publish(
     # flush but before the data does would serve a truncated snapshot
     # as current — fsync the staged tree first, then the parent dirent
     # after the swap so the renames themselves survive. Cost: one
-    # open+fsync per staged file, once per publish — bounded for
-    # state/ledger publishes. ``durable=False`` (r15, advisor finding:
-    # full-warehouse snapshot callers paid an unbounded per-publish
-    # latency with no in-code opt-out) skips the per-file walk: the
-    # publish keeps its complete-old-or-complete-new CRASH-ordering
-    # guarantee (process crash / Spark failure) but a power loss may
-    # lose staged contents — callers choosing it own flushing at the
-    # platform layer (e.g. one syncfs over the volume).
-    if durable:
-        fsync_dir_tree(staging)
+    # open+fsync per staged file, once per publish.
+    fsync_dir_tree(staging)
     if os.path.exists(base):
         os.rename(base, old)
     os.rename(staging, base)
