@@ -103,12 +103,17 @@ def test_every_snapshot_table_is_read_table_readable():
 def test_snapshot_roundtrips_through_read_table(spark, tmp_path):
     """Write a full snapshot (atomic path) and read every table back
     via read_table with its declared schema — the CLI's validate-side
-    read, end-to-end."""
+    read, end-to-end. Every read-back column has its declared type,
+    and building the twelve readers starts no Spark job (no
+    footer-inference job per table)."""
     from topn_clashroyal_etl_sql_snapshot_spark.plans import pipeline
     from topn_clashroyal_etl_sql_snapshot_spark.sinks import (
         write_snapshot_atomic,
     )
     from topn_clashroyal_etl_sql_snapshot_spark.sources import readers
+    from topn_clashroyal_etl_sql_snapshot_spark.sources.schemas import (
+        WAREHOUSE_SCHEMAS,
+    )
 
     res = pipeline.build_snapshot(
         spark,
@@ -122,10 +127,24 @@ def test_snapshot_roundtrips_through_read_table(spark, tmp_path):
     )
     wh = str(tmp_path / "wh")
     write_snapshot_atomic(res.tables, wh)
-    res.unpersist()
-    for name in pipeline.SNAPSHOT_TABLES:
-        back = readers.read_table(spark, wh, name)
-        assert back.count() > 0, name
+    sc = spark.sparkContext
+    sc.setJobGroup("read-table-probe", "read_table starts no job")
+    try:
+        back = {
+            name: readers.read_table(spark, wh, name)
+            for name in pipeline.SNAPSHOT_TABLES
+        }
+    finally:
+        sc.setJobGroup(None, None)
+    # the status tracker fills from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    started = sc.statusTracker().getJobIdsForGroup("read-table-probe")
+    assert started == [], f"read_table started Spark jobs {started}"
+    for name, df in back.items():
+        declared = WAREHOUSE_SCHEMAS[name]
+        for col in df.schema:
+            assert col.dataType == declared[col.name].dataType, (name, col)
+        assert df.count() > 0, name
 
 
 def test_read_testdata_relation_cache(spark, tmp_path):

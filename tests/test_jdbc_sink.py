@@ -316,7 +316,9 @@ def test_write_snapshot_atomic_parquet_swap_and_failure(spark, tmp_path):
     """Parquet stage-and-swap: a failure while staging table 2 leaves
     the serving directory the complete OLD snapshot (both tables, old
     values); a successful publish replaces everything and clears the
-    staging/old directories."""
+    staging/old directories. The tables stage concurrently, so a
+    failure in the FIRST table while a larger sibling still writes
+    must wait for that sibling before raising."""
     import os
 
     import pytest
@@ -376,6 +378,94 @@ def test_write_snapshot_atomic_parquet_swap_and_failure(spark, tmp_path):
     ] == [("Cycle", 3, 1)]
     assert not os.path.exists(wh + "__staging")
     assert not os.path.exists(wh + "__old")
+
+    # concurrent staging: the failing table comes FIRST and a larger
+    # sibling is still writing when it fails (each of its two tasks
+    # sleeps 1 s before writing 100k rows). The publish must raise only
+    # once no job is active, with the sibling's staged table complete,
+    # and leave the serving directory on the previous snapshot.
+    import time
+
+    nap = F.udf(lambda x: (time.sleep(1.0) if x % 100_000 == 0 else None) or x,
+                "long")
+    sibling = spark.range(0, 200_000, 1, 2).select(
+        F.lit("p3").alias("player_tag"), nap("id").alias("battles")
+    )
+    boom_first = spark.range(1).select(
+        F.assert_true(F.col("id") < 0).cast("string").alias("deck_type"),
+        F.col("id").alias("uses"),
+        F.col("id").alias("wins"),
+    )
+    sc = spark.sparkContext
+    with pytest.raises(Exception):
+        sink.write_snapshot_atomic(
+            {"meta_deck_types": boom_first, "player_summary": sibling}, wh
+        )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert os.path.exists(f"{wh}__staging/player_summary/_SUCCESS")
+    assert [
+        tuple(r)
+        for r in spark.read.parquet(f"{wh}/meta_deck_types").collect()
+    ] == [("Cycle", 3, 1)]
+    assert [
+        tuple(r) for r in spark.read.parquet(f"{wh}/player_summary").collect()
+    ] == [("p2", 9)]
+
+    # the next publish stages over the leftover staging directory
+    sink.write_snapshot_atomic(
+        {
+            "meta_deck_types": spark.createDataFrame(
+                [("Hog", 5, 2)], "deck_type string, uses long, wins long"
+            ),
+            "player_summary": spark.createDataFrame(
+                [("p4", 1)], "player_tag string, battles long"
+            ),
+        },
+        wh,
+    )
+    assert [
+        tuple(r)
+        for r in spark.read.parquet(f"{wh}/meta_deck_types").collect()
+    ] == [("Hog", 5, 2)]
+    assert [
+        tuple(r) for r in spark.read.parquet(f"{wh}/player_summary").collect()
+    ] == [("p4", 1)]
+    assert not os.path.exists(wh + "__staging")
+    assert not os.path.exists(wh + "__old")
+
+
+def _all_job_ids(spark) -> set[int]:
+    """Every job id the status store holds, after draining the listener
+    bus that fills it."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return {int(jobs.apply(i).jobId()) for i in range(jobs.size())}
+
+
+def test_write_snapshot_jobs_inherit_caller_job_group(spark, tmp_path):
+    """The concurrent publish runs each table's write on a pool thread;
+    every job it starts must still carry the CALLER's job group (the
+    handle for cancelJobGroup and for per-span job attribution), which
+    a plain thread pool loses."""
+    tables = {
+        name: spark.createDataFrame(
+            [(name, i)], "deck_type string, uses long"
+        )
+        for i, name in enumerate(("deck_types", "decks", "cards"))
+    }
+    sc = spark.sparkContext
+    before = _all_job_ids(spark)
+    sc.setJobGroup("publish-attribution", "write_snapshot_atomic")
+    try:
+        sink.write_snapshot_atomic(tables, str(tmp_path / "wh"))
+    finally:
+        sc.setJobGroup(None, None)
+    started = _all_job_ids(spark) - before
+    in_group = set(sc.statusTracker().getJobIdsForGroup("publish-attribution"))
+    assert len(started) > 1, started
+    assert started <= in_group, started - in_group
 
 
 def test_atomic_publish_rolls_back_mid_transaction(spark, tmp_path):

@@ -45,8 +45,7 @@ def snapshot(spark):
         overrides=spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
         top_n=5,
     )
-    yield result
-    result.unpersist()
+    return result
 
 
 def test_no_python_eval_anywhere(snapshot):
@@ -87,27 +86,39 @@ def test_dim_joins_broadcast(spark, snapshot):
 def test_matchups_no_join_at_all(snapshot):
     """E6 is one aggregate over the participant core (each row carries
     its opponent's deck type) — the override broadcasts sit upstream of
-    the persist; no fact-to-fact join anywhere."""
+    the checkpoint; no fact-to-fact join anywhere."""
     plan = _plan(snapshot.tables["meta_type_matchups"])
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
 
 
-def test_fanout_reads_persisted_cores(snapshot):
+def test_fanout_reads_persisted_cores(spark, snapshot, tmp_path):
     """Every warehouse table except the leaderboard-derived player dim
     reads through a materialization boundary — the checkpointed
-    participant core (Scan ExistingRDD) or a persisted grain/dim
-    (InMemoryTableScan) — and never re-derives the parse/dedup/classify
-    upstream (witnessed by the match-dedup Window, which only exists in
-    that lineage). A table that re-derived the raw input would repeat
-    the most expensive stage of the pipeline once per write job at
-    corpus scale."""
+    participant core or a checkpointed grain/dim (Scan ExistingRDD),
+    never a persist() cache (InMemoryTableScan) — and never re-derives
+    the parse/dedup/classify upstream (witnessed by the match-dedup
+    Window, which only exists in that lineage). A table that
+    re-derived the raw input would repeat the most expensive stage of
+    the pipeline once per write job at corpus scale.
+
+    Layout: a checkpoint keeps the AQE-coalesced partitioning of its
+    grain's final shuffle, so the tables read from ``deck_first``
+    publish fewer files than ``spark.sql.shuffle.partitions`` (an
+    InMemoryRelation kept every shuffle partition, one file each)."""
+    import os
+
+    from topn_clashroyal_etl_sql_snapshot_spark.sinks import snapshot as sink
+
     for name, df in snapshot.tables.items():
         if name == "player":
             continue
         plan = _plan(df)
-        assert "InMemoryTableScan" in plan or "Scan ExistingRDD" in plan, (
-            f"{name}: no materialization boundary in plan\n{plan}"
+        assert "Scan ExistingRDD" in plan, (
+            f"{name}: no checkpoint boundary in plan\n{plan}"
+        )
+        assert "InMemoryTableScan" not in plan, (
+            f"{name}: reads a persist() cache\n{plan}"
         )
         # the match-hash dedup window only exists in the raw parse
         # lineage (deck_first's first-seen window over the checkpointed
@@ -116,6 +127,18 @@ def test_fanout_reads_persisted_cores(snapshot):
             f"{name}: match-dedup window in plan — re-derives the raw "
             f"input\n{plan}"
         )
+
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wh = str(tmp_path / "wh")
+    sink.write_snapshot(
+        {n: snapshot.tables[n] for n in ("decks", "deck_cards")}, wh
+    )
+    for name in ("decks", "deck_cards"):
+        files = [
+            f for f in os.listdir(os.path.join(wh, name))
+            if f.startswith("part-")
+        ]
+        assert 0 < len(files) < partitions, (name, files)
 
 
 def test_participants_single_shuffle_lineage(spark):

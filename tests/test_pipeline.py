@@ -30,8 +30,7 @@ def snapshot(spark):
         top_n=TOP_N,
     )
     oracle = oracle_etl(leaderboard, battles, overrides, TOP_N)
-    yield result, oracle
-    result.unpersist()
+    return result, oracle
 
 
 def _rows(df, cols):

@@ -77,7 +77,6 @@ def test_incremental_snapshot_foreachbatch(spark, landing, tmp_path):
         result.tables["meta_deck_types"].write.mode("overwrite").parquet(
             f"{out}/meta_deck_types"
         )
-        result.unpersist()
         calls.append(bronze_dir)
 
     stream = streaming.stream_battles(spark, landing_dir)

@@ -8,7 +8,6 @@ of a shrug. Phases timed per sample:
 - build:   build_snapshot() call — plan construction + the eager
            persisted participant core materialization
 - counts:  the 12-table counts-union collect (every rollup's shuffle)
-- unpersist
 
 Also prints executor/JVM-side aggregates from the status tracker API
 (total tasks, GC time, shuffle bytes) per sample — a creep that shows
@@ -99,7 +98,6 @@ def main() -> None:
         ]
         reduce(lambda a, b: a.unionAll(b), counts).collect()
         t_counts = time.perf_counter() - t1
-        result.unpersist()
         after = jvm_totals()
         return {
             "wall": round(t_build + t_counts, 3),

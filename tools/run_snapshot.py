@@ -73,13 +73,11 @@ def main() -> int:
 
     if args.dry_run:
         print("\n[ETL] Dry-run mode: no writes.")
-        result.unpersist()
         return 0
 
     (write_snapshot_atomic if args.atomic else write_snapshot)(
         result.tables, args.out
     )
-    result.unpersist()
     print(f"\n[ETL] Snapshot written to {args.out}")
 
     # Validate from the written parquet (separate read path, like the

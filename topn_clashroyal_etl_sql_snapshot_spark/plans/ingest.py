@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from ..operators import dedup, sampling
+from ..session import inherit_thread_target as _pool_inherit
 from ..sinks import shards as shard_sink
 from ..sinks import snapshot as snap
 
@@ -63,26 +64,6 @@ STATE_NAMES = (
 # ``vec_col`` — hyperplane sketches (the LSH index) and the corpus
 # vectors (exact-cosine verification side). Both append-only.
 SEMANTIC_STATE_NAMES = ("sketches", "vectors")
-
-
-def _pool_inherit(spark: SparkSession):
-    """Session-form ``inheritable_thread_target`` wrapper for the
-    funnel's worker pools: pool threads do not inherit the calling
-    thread's Spark local properties under pinned-thread mode, so
-    without it a caller's job group / scheduler pool (and structured
-    streaming's per-run cancellation group) would not reach jobs
-    launched from these threads (r15 review finding). The SESSION form
-    (r16, r15 advisor finding) additionally propagates session TAGS
-    (``spark.addTag`` — the newer cancellation surface) and does not
-    warn per wrap. Guard: under a non-pinned gateway the session form
-    returns the session itself (there are no per-thread properties to
-    clone there — JVM threads are shared), so fall back to identity."""
-    from pyspark import inheritable_thread_target
-
-    wrapper = inheritable_thread_target(spark)
-    if not callable(wrapper) or wrapper is spark:
-        return lambda fn: fn
-    return wrapper
 
 
 def _empty_scores(ids: DataFrame, id_col: str = "id") -> DataFrame:

@@ -10,13 +10,17 @@ Re-expresses the reference's single-threaded accumulator loop
       → deck hash (B8) + classification (C1-C3, override-aware)
       → matchup matrix (E6) from the battle grain
       → unpivot to participant grain (D1) + win flag (B7)
-      → persist participants
+      → materialize participants (localCheckpoint)
+      → materialize the shared grains (localCheckpoint)
       → dims (D3-D6) + rollups (E1-E5)
 
 Scale notes (the 100 TB story):
-- The battle→participant core is ONE pass; ``participants`` is persisted
-  before fanning out to the rollup writes, mirroring the reference's
-  single-pass multi-aggregate structure (SURVEY.md §4).
+- The battle→participant core is ONE pass; ``participants`` is
+  materialized before fanning out to the rollup writes, mirroring the
+  reference's single-pass multi-aggregate structure (SURVEY.md §4).
+- The three shared grains are materialized the same way, so AQE
+  coalesces each one's final shuffle and every table write downstream
+  runs a few right-sized tasks, not ``spark.sql.shuffle.partitions``.
 - The card catalog and overrides are tiny dimensions → map literals /
   broadcast joins; nothing here shuffles except the groupBys themselves
   and the two first-seen windows (match dedup, deck dim), both keyed on
@@ -59,15 +63,12 @@ class SnapshotResult:
     tables: dict[str, DataFrame]
     participants: DataFrame  # materialized core (localCheckpoint)
     counters: dict[str, int] = field(default_factory=dict)
-    _persisted: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self) -> None:
-        # participants is checkpoint-backed (blocks release via
-        # ContextCleaner once the result drops); unpersist() is a safe
-        # no-op there and real for the persisted grain frames.
-        self.participants.unpersist()
-        for df in self._persisted:
-            df.unpersist()
+        """No-op. Nothing the build makes is persisted: the core and the
+        shared grains are localCheckpoint blocks, which ContextCleaner
+        releases once the result is dropped. Kept only because
+        ``perfbench/workloads.py`` calls it."""
 
 
 def _uses_wins():
@@ -369,10 +370,18 @@ def build_snapshot(
     # meta_type_deck_ids; ``card_grain`` serves meta_type_cards / cards
     # (card_name rides as a grain key so the cards dim's max-per-id is
     # a regroup of the same frame).
+    #
+    # Both grains (and ``deck_first`` below) are materialized with the
+    # core's primitive, localCheckpoint, not persist(): the checkpoint
+    # job runs the AQE plan, so the stored blocks keep the COALESCED
+    # partitioning of the grain's final shuffle (a handful of
+    # partitions at snapshot scale), whereas an InMemoryRelation keeps
+    # all ``spark.sql.shuffle.partitions`` and every write stage
+    # reading it ran that many tasks (and wrote that many files).
     type_grain = (
         participants.groupBy("deck_type", "opp_deck_type", "deck_hash")
         .agg(*_uses_wins())
-        .persist()
+        .localCheckpoint(eager=True)
     )
     card_grain = (
         participants.select("deck_type", "won", F.explode("obs").alias("c"))
@@ -383,7 +392,7 @@ def build_snapshot(
             F.col("c.card_name").alias("card_name"),
         )
         .agg(*_uses_wins())
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     def _sum_uses_wins():
@@ -407,16 +416,16 @@ def build_snapshot(
     first_seen = Window.partitionBy("deck_hash").orderBy(
         "battleTime", "match_hash", "side"
     )
-    # Persisted: three tables (decks, deck_cards, player_type_cards)
+    # Materialized: three tables (decks, deck_cards, player_type_cards)
     # consume this, and the window behind it re-shuffles the ENTIRE
-    # participant core by deck_hash — without the persist each table's
-    # write job would repeat that corpus-sized shuffle. The output
-    # itself is small (one row per unique deck).
+    # participant core by deck_hash — without the checkpoint each
+    # table's write job would repeat that corpus-sized shuffle. The
+    # output itself is small (one row per unique deck).
     deck_first = (
         participants.withColumn("_rn", F.row_number().over(first_seen))
         .filter(F.col("_rn") == 1)
         .select("deck_hash", "deck_type", "obs")
-        .persist()
+        .localCheckpoint(eager=True)
     )
     decks = deck_first.select("deck_hash", "deck_type")
     deck_cards = deck_first.select(
@@ -525,8 +534,5 @@ def build_snapshot(
         "meta_type_matchups": meta_type_matchups,
     }
     return SnapshotResult(
-        tables=tables,
-        participants=participants,
-        counters=counters,
-        _persisted=[deck_first, type_grain, card_grain],
+        tables=tables, participants=participants, counters=counters
     )

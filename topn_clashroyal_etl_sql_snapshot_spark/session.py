@@ -54,3 +54,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def inherit_thread_target(spark: SparkSession):
+    """Session-form ``inheritable_thread_target`` wrapper for worker
+    pools that launch Spark jobs: pool threads do not inherit the
+    calling thread's Spark local properties under pinned-thread mode,
+    so without it a caller's job group / scheduler pool (and structured
+    streaming's per-run cancellation group) would not reach jobs
+    launched from these threads. The SESSION form also propagates
+    session TAGS (``spark.addTag``, the newer cancellation surface) and
+    does not warn per wrap. Under a non-pinned gateway the session form
+    returns the session itself (there are no per-thread properties to
+    clone there, JVM threads are shared), so fall back to identity.
+    The properties are captured when this is called, not when the
+    wrapped function runs."""
+    from pyspark import inheritable_thread_target
+
+    wrapper = inheritable_thread_target(spark)
+    if not callable(wrapper) or wrapper is spark:
+        return lambda fn: fn
+    return wrapper

@@ -62,10 +62,14 @@ def read_overrides(spark: SparkSession, path: str | None) -> DataFrame:
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
-    """Read one warehouse table written by the snapshot sink."""
+    """Read one warehouse table written by the snapshot sink, with its
+    declared schema: no footer-inference job, so building the reader
+    starts no Spark job."""
     if name not in WAREHOUSE_SCHEMAS:
         raise KeyError(f"unknown warehouse table {name!r}")
-    return spark.read.parquet(os.path.join(warehouse_dir, name))
+    return spark.read.schema(WAREHOUSE_SCHEMAS[name]).parquet(
+        os.path.join(warehouse_dir, name)
+    )
 
 
 # Session-scoped read-relation cache for read_testdata (r16, guide §6:
