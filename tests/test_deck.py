@@ -54,17 +54,11 @@ def _catalog_df(spark):
 
 def _classify(spark, decks: list[list[str]]) -> list[str]:
     maps = deck_ops.catalog_maps(_catalog_df(spark))
-    df = spark.createDataFrame([(d,) for d in decks], "names array<string>")
-    out = df.select(
-        deck_ops.classify_cards(
-            F.col("names"),
-            maps["elixir_by_name"],
-            maps["bait_by_name"],
-            maps["spam_by_name"],
-            maps["tank_by_name"],
-        ).alias("t")
+    df = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(decks)], "i int, names array<string>"
     )
-    return [r[0] for r in out.collect()]
+    out = deck_ops.classify_cards(df, {"t": "names"}, maps).orderBy("i")
+    return [r["t"] for r in out.collect()]
 
 
 def test_classifier_rule_branches(spark):
@@ -127,9 +121,12 @@ def _extract(spark, cards: list[dict]):
         [(cards,)],
         "cards array<struct<id: long, name: string, evolutionLevel: int>>",
     )
-    return df.select(
-        deck_ops.extract_deck(F.col("cards"), maps["name_by_id"]).alias("obs")
-    ).first()["obs"]
+    rows = (
+        df.filter(F.expr(deck_ops.valid_deck("cards")))
+        .select(F.expr(deck_ops.deck_obs("cards", maps["name_by_id"])).alias("obs"))
+        .collect()
+    )
+    return rows[0]["obs"] if rows else None
 
 
 def _card(cid, name=None, evo=None):

@@ -77,7 +77,7 @@ def test_ladder_value(spark):
 def test_card_variant(spark):
     rows = [(0,), (1,), (2,), (3,), (None,)]
     df = spark.createDataFrame(rows, schema="lvl int")
-    got = [r[0] for r in df.select(exprs.card_variant(F.col("lvl"))).collect()]
+    got = [r[0] for r in df.select(F.expr(exprs.card_variant("lvl"))).collect()]
     assert got == ["normal", "evo", "hero", "normal", "normal"]
 
 
@@ -121,7 +121,7 @@ def test_deck_hash_parity_simple(spark):
         ("26000038", "normal"),
     ]
     df = _pairs_df(spark, pairs)
-    got = df.select(exprs.deck_hash(F.col("pairs"))).first()[0]
+    got = df.select(F.expr(exprs.deck_hash("pairs"))).first()[0]
     assert got == py_deck_hash(pairs)
 
 
@@ -139,7 +139,7 @@ def test_deck_hash_parity_unequal_id_lengths(spark):
         ("41", "normal"),
     ]
     df = _pairs_df(spark, pairs)
-    got = df.select(exprs.deck_hash(F.col("pairs"))).first()[0]
+    got = df.select(F.expr(exprs.deck_hash("pairs"))).first()[0]
     assert got == py_deck_hash(pairs)
 
 
@@ -147,8 +147,8 @@ def test_deck_hash_same_set_different_order_equal(spark):
     pairs = [(str(26000000 + i), "normal") for i in range(8)]
     df1 = _pairs_df(spark, pairs)
     df2 = _pairs_df(spark, list(reversed(pairs)))
-    h1 = df1.select(exprs.deck_hash(F.col("pairs"))).first()[0]
-    h2 = df2.select(exprs.deck_hash(F.col("pairs"))).first()[0]
+    h1 = df1.select(F.expr(exprs.deck_hash("pairs"))).first()[0]
+    h2 = df2.select(F.expr(exprs.deck_hash("pairs"))).first()[0]
     assert h1 == h2 == py_deck_hash(pairs)
 
 

@@ -798,13 +798,15 @@ def test_pool_inherit_propagates_job_group_and_session_tags(spark):
     import warnings
     from concurrent.futures import ThreadPoolExecutor
 
+    from topn_clashroyal_etl_sql_snapshot_spark.session import inherit_thread_target
+
     sc = spark.sparkContext
     sc.setJobGroup("r16-pin-group", "pool inheritance pin")
     spark.addTag("r16-pin-tag")
     try:
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
-            wrap = ingest._pool_inherit(spark)
+            wrap = inherit_thread_target(spark)
 
             def probe():
                 return (

@@ -50,7 +50,9 @@ def snapshot(spark):
 
 def test_no_python_eval_anywhere(snapshot):
     """Zero Python UDF nodes in any warehouse table's plan — the whole
-    ETL is built-in column algebra (whole-stage-codegen eligible)."""
+    ETL is built-in column algebra and runs in the JVM. (Not all of it
+    in whole-stage codegen: a ``Project`` holding a lambda, and every
+    ``CollectMetrics``, runs interpreted.)"""
     for name, df in snapshot.tables.items():
         plan = _plan(df)
         assert "BatchEvalPython" not in plan, f"{name}: Python UDF in plan"
@@ -165,6 +167,37 @@ def test_participants_single_shuffle_lineage(spark):
     assert len(shuffles) == 1, f"expected 1 shuffle in participant core:\n{plan}"
 
 
+def test_core_builds_each_lambda_once(spark):
+    """The participant lineage holds each higher-order function once:
+    at most 40 lambda nodes (118 when a filter on the extracted decks
+    was pushed below their projection, substituting the extraction into
+    it, and each classifier rule re-derived the card names), and exactly
+    one extraction ``transform`` per side. Lambdas run interpreted, per
+    row, so a copy in the plan is a copy of the work."""
+    import re
+
+    from topn_clashroyal_etl_sql_snapshot_spark.operators import deck as deck_ops
+
+    leaderboard, battles, overrides = generate_fixture()
+    maps = deck_ops.catalog_maps(
+        spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA)
+    )
+    core, _ = pipeline.participant_rows(
+        spark.createDataFrame(battles, BATTLE_SCHEMA),
+        maps,
+        spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
+    )
+    plan = _plan(core)
+    assert plan.count("lambdafunction(") <= 40, plan
+    for side in ("team", "opponent"):
+        extractions = re.findall(
+            rf"transform\(slice\({side}#\d+\[0\]\.cards, 1, 8\), "
+            r"lambdafunction\((?:named_)?struct\(card_id,",
+            plan,
+        )
+        assert len(extractions) == 1, (side, plan)
+
+
 def test_checkpointed_core_is_bare_scan(snapshot):
     """The materialized core is a lineage-truncated block scan: no
     Exchange, no Window — downstream tables analyze one node instead of
@@ -178,7 +211,7 @@ def test_checkpointed_core_is_bare_scan(snapshot):
 def test_scan_counters_report_is_relational(spark):
     """E7 counters: the participant lineage ``build_snapshot``
     checkpoints carries one CollectMetrics node per counter, and no
-    Python nodes, so the counters ride the checkpoint job in codegen."""
+    Python nodes, so the counters ride the checkpoint job."""
     from topn_clashroyal_etl_sql_snapshot_spark.operators import deck as deck_ops
 
     leaderboard, battles, overrides = generate_fixture()

@@ -4,6 +4,7 @@ table-for-table, plus the G1-G6 invariant suite."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 
 from topn_clashroyal_etl_sql_snapshot_spark.plans import pipeline, validate
 from topn_clashroyal_etl_sql_snapshot_spark.sources.schemas import (
@@ -13,22 +14,35 @@ from topn_clashroyal_etl_sql_snapshot_spark.sources.schemas import (
     OVERRIDES_SCHEMA,
 )
 
-from topn_clashroyal_etl_sql_snapshot_spark.testing.cr_synthetic import CATALOG_ROWS, generate_fixture, oracle_etl
+from topn_clashroyal_etl_sql_snapshot_spark.testing.cr_synthetic import (
+    CATALOG_ROWS,
+    generate_fixture,
+    make_battle,
+    make_deck,
+    oracle_etl,
+    py_deck_hash_from_cards,
+)
 
 TOP_N = 5
+
+
+def _build(spark, leaderboard, battles, overrides, top_n=TOP_N):
+    if not isinstance(leaderboard, DataFrame):
+        leaderboard = spark.createDataFrame(leaderboard, LEADERBOARD_SCHEMA)
+    return pipeline.build_snapshot(
+        spark,
+        battles=spark.createDataFrame(battles, BATTLE_SCHEMA),
+        leaderboard=leaderboard,
+        catalog=spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA),
+        overrides=spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
+        top_n=top_n,
+    )
 
 
 @pytest.fixture(scope="module")
 def snapshot(spark):
     leaderboard, battles, overrides = generate_fixture()
-    result = pipeline.build_snapshot(
-        spark,
-        battles=spark.createDataFrame(battles, BATTLE_SCHEMA),
-        leaderboard=spark.createDataFrame(leaderboard, LEADERBOARD_SCHEMA),
-        catalog=spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA),
-        overrides=spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
-        top_n=TOP_N,
-    )
+    result = _build(spark, leaderboard, battles, overrides)
     oracle = oracle_etl(leaderboard, battles, overrides, TOP_N)
     return result, oracle
 
@@ -190,6 +204,122 @@ def test_matchup_double_insert_invariant(snapshot):
     got = result.tables["meta_type_matchups"].groupBy().sum("uses").first()[0]
     assert got == total
     assert got % 2 == 0
+
+
+def test_dedup_pick_among_non_identical_copies(spark):
+    """D2 picks the same copy of a match as the oracle when its copies
+    differ, and dedups BEFORE B6 validation (scripts:257-261, :279-282).
+
+    Match 1 has three copies that differ only in one card's
+    evolutionLevel, so each copy has its own deck hash; the pick is the
+    copy whose serialized sides sort first (evolutionLevel 0). Match 2
+    has a valid copy and a copy whose deck repeats a card: the invalid
+    copy sorts first (its second card id 103 < 104), so it is picked
+    and the whole match is discarded — validating first would keep the
+    valid copy instead."""
+    leaderboard = [
+        {"tag": t, "name": t, "rank": i, "eloRating": 2000 - i}
+        for i, t in enumerate(("#A", "#B", "#C", "#D"), start=1)
+    ]
+
+    def evo_copy(level):
+        cards = make_deck(0)
+        cards[2] = dict(cards[2], evolutionLevel=level)
+        return make_battle(
+            "20260110T100000.000Z", 72000006,
+            "#A", 2, cards, "#B", 1, make_deck(5),
+        )
+
+    dup = make_deck(2)
+    dup[1] = dict(dup[0])
+    match2 = [
+        make_battle("20260110T110000.000Z", 72000464,
+                    "#C", 1, cards, "#D", 0, make_deck(3))
+        for cards in (make_deck(2), dup)
+    ]
+    battles = [evo_copy(2), match2[0], evo_copy(1), match2[1], evo_copy(0)]
+
+    oracle = oracle_etl(leaderboard, battles, [], 4)
+    # the planted shape: 2 matches survive dedup, only match 1 validates,
+    # and its pick is the evolutionLevel-0 copy
+    assert oracle["counters"]["deduped_matches"] == 2
+    assert oracle["counters"]["valid_battles"] == 1
+    picked = py_deck_hash_from_cards(evo_copy(0)["team"][0]["cards"])
+    assert picked in oracle["decks"]
+
+    result = _build(spark, leaderboard, battles, [], top_n=4)
+    assert result.counters == oracle["counters"]
+    cols = ["match_hash", "battle_time", "side", "player_tag", "deck_hash", "win"]
+    got = _rows(result.tables["player_battles"], cols)
+    want = sorted(tuple(r[c] for c in cols) for r in oracle["player_battles"])
+    assert got == want
+    assert _rows(result.tables["decks"], ["deck_hash", "deck_type"]) == sorted(
+        oracle["decks"].items()
+    )
+    got = _rows(
+        result.tables["deck_cards"], ["deck_hash", "card_id", "card_variant", "slot"]
+    )
+    want = sorted(
+        (dh, cid, var, slot)
+        for dh, obs in oracle["deck_cards"].items()
+        for (cid, _, var, slot) in obs
+    )
+    assert got == want
+
+
+def test_build_jobs_run_in_callers_job_group(spark):
+    """Every job ``build_snapshot`` starts — also those its concurrent
+    materializations submit from worker threads — carries the caller's
+    job group, so tracing by group (and cancelling by group) sees the
+    whole build. A worker thread without the caller's local properties
+    would submit group-less jobs."""
+    leaderboard, battles, overrides = generate_fixture()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("build-attribution", "build_snapshot")
+    try:
+        _build(spark, leaderboard, battles, overrides)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stray = set(tracker.getJobIdsForGroup(None)) - before
+    assert not stray, stray
+    # catalog collect, leaderboard guard, core checkpoint, three grains
+    assert len(tracker.getJobIdsForGroup("build-attribution")) >= 6
+
+
+def test_build_raises_after_its_jobs_finish(spark):
+    """An oversized leaderboard fails the guard that runs beside the
+    core's checkpoint job. ``build_snapshot`` raises the guard's error,
+    and only once none of its jobs is still running and none of its
+    worker threads could start another."""
+    import threading
+
+    leaderboard_rows, battles, overrides = generate_fixture()
+    big = spark.range(pipeline.MAX_LEADERBOARD_ROWS + 1).selectExpr(
+        "concat('#P', id) AS tag",
+        "'n' AS name",
+        "CAST(id + 1 AS INT) AS rank",
+        "CAST(NULL AS BIGINT) AS trophies",
+        "CAST(2000 - id AS BIGINT) AS eloRating",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    threads_before = set(threading.enumerate())
+    sc.setJobGroup("build-failure", "build_snapshot with an oversized leaderboard")
+    try:
+        with pytest.raises(ValueError, match="single-partition window"):
+            _build(spark, big, battles, overrides)
+        left_running = set(threading.enumerate()) - threads_before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not left_running, left_running
+    # every job event posted before the raise is now in the status store
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup("build-failure")]
+    assert jobs
+    running = [j.jobId for j in jobs if j.status not in ("SUCCEEDED", "FAILED")]
+    assert not running, running
 
 
 def test_validation_suite_green(snapshot):

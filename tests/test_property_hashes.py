@@ -60,7 +60,7 @@ def test_deck_hash_parity_property(spark, batch):
     df = spark.createDataFrame(list(enumerate(batch)), schema)
     got = {
         r["i"]: r["h"]
-        for r in df.select("i", exprs.deck_hash(F.col("pairs")).alias("h")).collect()
+        for r in df.select("i", F.expr(exprs.deck_hash("pairs")).alias("h")).collect()
     }
     for i, ps in enumerate(batch):
         assert got[i] == py_deck_hash(ps), ps

@@ -4,7 +4,6 @@ from .exprs import (
     battle_result,
     card_variant,
     deck_hash,
-    deck_pairs_from_cards,
     deck_signature,
     is_ranked_1v1,
     ladder_value,
@@ -23,7 +22,6 @@ __all__ = [
     "battle_result",
     "card_variant",
     "deck_hash",
-    "deck_pairs_from_cards",
     "deck_signature",
     "is_ranked_1v1",
     "ladder_value",

@@ -1,9 +1,18 @@
 """Column-expression library: scalar transforms and content hashes.
 
-Everything here is pure Catalyst column algebra — no Python UDFs — so the
-pipeline stays inside whole-stage codegen and parquet scans stay
-vectorized. Each function cites the reference behavior it reproduces
+Everything here is built-in Catalyst expressions — no Python UDFs — so
+the pipeline runs in the JVM and parquet scans stay vectorized. Scalar
+expressions compile into whole-stage codegen; a ``Project`` holding a
+higher-order function (``transform``, ``filter``, ``aggregate``, a sort
+comparator) runs outside it, interpreted, so each lambda a plan carries
+is paid per row. Each function cites the reference behavior it reproduces
 (paths under ``/root/reference/``).
+
+The deck-side functions (:func:`card_variant`, :func:`deck_signature`,
+:func:`deck_hash`) take and return SQL TEXT, so a caller can compose
+them into one parsed expression (see ``operators/deck.py``); wrap the
+result in ``F.expr`` to get a Column. The others take and return
+Columns.
 
 Byte-exact hash parity matters: deck/match identity in the reference is a
 SHA1 over a canonical serialization, and downstream dedup + dimension keys
@@ -50,17 +59,15 @@ def ladder_value(trophies: Column, elo_rating: Column) -> Column:
     )
 
 
-def card_variant(evolution_level: Column) -> Column:
+def card_variant(evolution_level: str) -> str:
     """evolutionLevel 1 → evo, 2 → hero, else (null/0/other) → normal.
 
     Mirrors ``card_variant_from_evolution_level``
     (``scripts/etl_snapshot_topn.py:50-66``).
     """
-    lvl = F.coalesce(evolution_level.cast("int"), F.lit(0))
     return (
-        F.when(lvl == 1, F.lit("evo"))
-        .when(lvl == 2, F.lit("hero"))
-        .otherwise(F.lit("normal"))
+        f"CASE coalesce(CAST({evolution_level} AS INT), 0) "
+        "WHEN 1 THEN 'evo' WHEN 2 THEN 'hero' ELSE 'normal' END"
     )
 
 
@@ -96,44 +103,28 @@ def win_rate(wins: Column, uses: Column) -> Column:
 # Deck identity hash (B8)
 # ---------------------------------------------------------------------------
 
-def deck_signature(pairs: Column) -> Column:
+def deck_signature(pairs: str) -> str:
     """Canonical deck signature from ``array<struct<cid:string, variant:string>>``.
 
     Reference (``src/clashdb/hash_utils.py:11-22``): sort the
     ``(str(card_id), variant)`` *tuples* lexicographically, then join as
-    ``"cid:variant|..."``. ``F.array_sort`` on a struct array compares
+    ``"cid:variant|..."``. ``sort_array`` on a struct array compares
     field-by-field (byte-wise UTF8 string compare ≡ Python str compare for
     the ASCII ids/variants involved), so the struct fields MUST be ordered
     ``(cid, variant)``. Sorting pre-joined ``"cid:variant"`` strings would
     diverge when ids have unequal lengths (``:`` sorts above digits) — see
-    SURVEY.md §1.4.1.
+    SURVEY.md §1.4.1. (``sort_array``, not ``array_sort``: the latter
+    carries a comparator lambda, evaluated per comparison.)
     """
-    sorted_pairs = F.array_sort(pairs)
-    return F.array_join(
-        F.transform(sorted_pairs, lambda x: F.concat_ws(":", x["cid"], x["variant"])),
-        "|",
+    return (
+        f"array_join(transform(sort_array({pairs}), "
+        "x -> concat_ws(':', x.cid, x.variant)), '|')"
     )
 
 
-def deck_hash(pairs: Column) -> Column:
+def deck_hash(pairs: str) -> str:
     """SHA1 hex of the canonical signature (``src/clashdb/hash_utils.py:25-26``)."""
-    return F.sha1(deck_signature(pairs))
-
-
-def deck_pairs_from_cards(cards: Column) -> Column:
-    """Build the hashable ``(cid, variant)`` struct array from raw battle cards.
-
-    ``cards`` is ``array<struct<id, name, evolutionLevel>>`` (first 8 taken
-    upstream). Field order (cid, variant) feeds ``deck_signature``'s
-    tuple sort.
-    """
-    return F.transform(
-        cards,
-        lambda c: F.struct(
-            c["id"].cast("string").alias("cid"),
-            card_variant(c["evolutionLevel"]).alias("variant"),
-        ),
-    )
+    return f"sha1({deck_signature(pairs)})"
 
 
 # ---------------------------------------------------------------------------

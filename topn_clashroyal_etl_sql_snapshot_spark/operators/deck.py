@@ -16,15 +16,23 @@ Reference behaviors reproduced (all paths under ``/root/reference/``):
 - C3  override application (scripts/etl_snapshot_topn.py:290-291):
       ``overrides[deck_hash]`` beats the classifier.
 
-Everything is array/aggregate column algebra over the 8-card array — no
+Everything is array/aggregate SQL algebra over the 8-card array — no
 Python UDFs, no extra shuffle: features and classification are computed
 per-deck from the card array *before* any explode, so the classifier adds
 zero exchanges to the plan.
+
+The expression functions here take SQL text for their inputs and return
+SQL text (callers wrap it once in ``F.expr``): one parsed expression per
+derived column costs a few py4j round trips where the equivalent
+Column-API tree cost one per node. Arrays that several rules read — a
+deck's card names and their elixir costs — are staged as columns of
+their own (:func:`classify_cards`), so each lambda over them is built,
+analyzed and evaluated once per deck, not once per rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exprs
@@ -33,147 +41,127 @@ ARCHETYPES = ("Siege", "Bait", "Cycle", "Bridge Spam", "Beatdown", "Hybrid")
 
 
 # ---------------------------------------------------------------------------
-# B6 — extract + validate the 8-card deck (array form, no explode needed)
+# B6 — validate + extract the 8-card deck (array form, no explode needed)
 # ---------------------------------------------------------------------------
 
-def extract_deck(cards: Column, catalog_by_id: Column) -> Column:
-    """Build ``array<struct<card_id, card_name, card_variant, slot>>`` or NULL.
+def valid_deck(cards: str) -> str:
+    """B6 validity of the raw ``array<struct<id, name, evolutionLevel>>``
+    (scripts/etl_snapshot_topn.py:82-107), as a predicate: ≥8 cards
+    present, no null id (or null card) among the first 8, and the 8
+    ``(id, variant)`` pairs distinct. A null id maps its pair to NULL,
+    which ``array_compact`` drops, so one count covers all three rules.
 
-    ``cards`` is the raw ``array<struct<id, name, evolutionLevel>>``;
-    ``catalog_by_id`` is a ``map<bigint, string>`` (card_id → name) for the
-    name fallback (B10, src/clashdb/card_metadata.py:20-25). NULL result ≡
-    the reference returning ``None`` (battle later discarded).
-
-    Validity (scripts/etl_snapshot_topn.py:82-107): ≥8 cards present, a
-    card with null id invalidates the deck, and the 8 ``(id, variant)``
-    pairs must be distinct.
-    """
-    first8 = F.slice(cards, 1, 8)
-    obs = F.transform(
-        first8,
-        lambda c, i: F.struct(
-            c["id"].alias("card_id"),
-            F.coalesce(
-                F.nullif(F.trim(c["name"]), F.lit("")),
-                F.element_at(catalog_by_id, c["id"]),
-                F.lit(""),
-            ).alias("card_name"),
-            exprs.card_variant(c["evolutionLevel"]).alias("card_variant"),
-            (i + F.lit(1)).cast("int").alias("slot"),
-        ),
+    A predicate over the RAW cards, not a null test of
+    :func:`deck_obs`: a filter on a projected column is pushed below the
+    projection with the column's expression substituted, which evaluated
+    the extraction once more per use."""
+    pair = (
+        "IF(c.id IS NULL, NULL, named_struct('id', c.id, 'variant', "
+        f"{exprs.card_variant('c.evolutionLevel')}))"
     )
-    n_cards = F.size(F.coalesce(cards, F.array()))
-    has_null_id = F.exists(first8, lambda c: c["id"].isNull())
-    n_unique_pairs = F.size(
-        F.array_distinct(
-            F.transform(obs, lambda o: F.struct(o["card_id"], o["card_variant"]))
-        )
+    return (
+        f"size(array_compact(array_distinct(transform(slice({cards}, 1, 8), "
+        f"c -> {pair})))) = 8"
     )
-    valid = (n_cards >= 8) & ~has_null_id & (n_unique_pairs == 8)
-    return F.when(valid, obs)
 
 
-def deck_hash_from_obs(obs: Column) -> Column:
+def deck_obs(cards: str, name_by_id: str) -> str:
+    """``array<struct<card_id, card_name, card_variant, slot>>`` of the
+    first 8 raw cards; apply it to decks :func:`valid_deck` accepts.
+
+    ``name_by_id`` is a ``map<bigint, string>`` (card_id → name) for the
+    name fallback (B10, src/clashdb/card_metadata.py:20-25)."""
+    return (
+        f"transform(slice({cards}, 1, 8), (c, i) -> named_struct("
+        "'card_id', c.id, "
+        "'card_name', coalesce(nullif(trim(c.name), ''), "
+        f"element_at({name_by_id}, c.id), ''), "
+        f"'card_variant', {exprs.card_variant('c.evolutionLevel')}, "
+        "'slot', i + 1))"
+    )
+
+
+def deck_hash_from_obs(obs: str) -> str:
     """Deck hash from the extracted observation array (B8 glue,
     scripts/etl_snapshot_topn.py:140-143)."""
-    pairs = F.transform(
-        obs,
-        lambda o: F.struct(
-            o["card_id"].cast("string").alias("cid"),
-            o["card_variant"].alias("variant"),
-        ),
-    )
-    return exprs.deck_hash(pairs)
-
-
-# ---------------------------------------------------------------------------
-# C1 — per-deck features from card names + catalog maps
-# ---------------------------------------------------------------------------
-
-def deck_features(card_names: Column, elixir_by_name: Column,
-                  bait_by_name: Column, spam_by_name: Column,
-                  tank_by_name: Column) -> Column:
-    """Compute the classifier feature struct from an array of card names.
-
-    The catalog arrives as broadcast-able ``map<string, X>`` literals /
-    columns keyed by card name (the reference keys its metadata dict by
-    name, src/analysist/deck_type.py:16). Unknown names contribute no
-    elixir and false flags, exactly like ``_CARD_META_BY_NAME.get(c, {})``.
-    """
-    elixirs = F.filter(
-        F.transform(card_names, lambda n: F.element_at(elixir_by_name, n)),
-        lambda e: e.isNotNull(),
-    )
-    n_elixir = F.size(elixirs)
-    # sum of the 4 cheapest (sorted ascending, take 4) — deck_type.py:61
-    four_cheapest = F.aggregate(
-        F.slice(F.array_sort(elixirs), 1, 4),
-        F.lit(0.0),
-        lambda acc, e: acc + e.cast("double"),
-    )
-    total_elixir = F.aggregate(
-        elixirs, F.lit(0.0), lambda acc, e: acc + e.cast("double")
-    )
-
-    def _flag_count(m: Column) -> Column:
-        return F.size(
-            F.filter(card_names, lambda n: F.coalesce(F.element_at(m, n), F.lit(False)))
-        )
-
-    return F.struct(
-        # avg over 8 regardless of how many resolved — deck_type.py:59
-        F.when(n_elixir == 0, F.lit(3.0))
-        .otherwise(total_elixir / F.lit(8.0))
-        .alias("avg_elixir"),
-        F.when(n_elixir == 0, F.lit(12.0)).otherwise(four_cheapest).alias(
-            "four_card_cycle_cost"
-        ),
-        F.array_contains(card_names, "X-Bow").alias("has_xbow"),
-        F.array_contains(card_names, "Mortar").alias("has_mortar"),
-        _flag_count(bait_by_name).alias("bait_pieces"),
-        _flag_count(spam_by_name).alias("bridge_spam_count"),
-        _flag_count(tank_by_name).alias("big_tank_count"),
+    return exprs.deck_hash(
+        f"transform({obs}, o -> named_struct("
+        "'cid', CAST(o.card_id AS STRING), 'variant', o.card_variant))"
     )
 
 
 # ---------------------------------------------------------------------------
-# C2 — rule classifier (when-chain encodes rule priority)
+# C1 + C2 — features from card names + catalog maps, rule classifier
 # ---------------------------------------------------------------------------
 
-def classify(features: Column, card_names: Column) -> Column:
-    """First-match-wins archetype rules (src/analysist/deck_type.py:110-152).
+def _classify(names: str, elixirs: str, maps: dict[str, str]) -> str:
+    """First-match-wins archetype rules (src/analysist/deck_type.py:110-152)
+    over the C1 features (deck_type.py:38-82) of a deck's non-empty card
+    ``names`` and their resolved ``elixirs``.
 
-    Empty/null deck → Hybrid (deck_type.py:97-98).
-    """
-    f = features
+    Unknown names contribute no elixir and false flags, exactly like
+    ``_CARD_META_BY_NAME.get(c, {})``; avg_elixir divides by 8 however
+    many resolved (deck_type.py:59), the cycle cost sums the 4 cheapest
+    (:61), and a deck with no resolved elixir takes the defaults avg=3.0
+    / cycle=12.0. Empty deck → Hybrid (deck_type.py:97-98)."""
+
+    def flag_count(m: str) -> str:
+        return f"size(filter({names}, n -> coalesce(element_at({maps[m]}, n), false)))"
+
+    def elixir_sum(arr: str) -> str:
+        return f"aggregate({arr}, 0.0D, (acc, e) -> acc + CAST(e AS DOUBLE))"
+
+    no_elixir = f"size({elixirs}) = 0"
+    cycle = (
+        f"IF({no_elixir}, 12.0D, "
+        f"{elixir_sum(f'slice(sort_array({elixirs}), 1, 4)')})"
+    )
+    avg = f"IF({no_elixir}, 3.0D, {elixir_sum(elixirs)} / 8.0D)"
     return (
-        F.when(F.size(F.coalesce(card_names, F.array())) == 0, F.lit("Hybrid"))
-        .when(f["has_xbow"], F.lit("Siege"))
-        .when(f["has_mortar"], F.lit("Siege"))
-        .when(f["bait_pieces"] >= 3, F.lit("Bait"))
-        .when(f["four_card_cycle_cost"] <= 9, F.lit("Cycle"))
-        .when(f["bridge_spam_count"] >= 2, F.lit("Bridge Spam"))
-        .when((f["big_tank_count"] >= 1) & (f["avg_elixir"] >= 3.5), F.lit("Beatdown"))
-        .otherwise(F.lit("Hybrid"))
+        f"CASE WHEN size({names}) = 0 THEN 'Hybrid' "
+        f"WHEN array_contains({names}, 'X-Bow') "
+        f"OR array_contains({names}, 'Mortar') THEN 'Siege' "
+        f"WHEN {flag_count('bait_by_name')} >= 3 THEN 'Bait' "
+        f"WHEN {cycle} <= 9 THEN 'Cycle' "
+        f"WHEN {flag_count('spam_by_name')} >= 2 THEN 'Bridge Spam' "
+        f"WHEN {flag_count('tank_by_name')} >= 1 AND {avg} >= 3.5D "
+        "THEN 'Beatdown' "
+        "ELSE 'Hybrid' END"
     )
 
 
-def classify_cards(card_names: Column, elixir_by_name: Column,
-                   bait_by_name: Column, spam_by_name: Column,
-                   tank_by_name: Column) -> Column:
-    """C1 + C2 in one expression over an array of card names.
+def classify_cards(
+    df: DataFrame, card_names: dict[str, str], maps: dict[str, str]
+) -> DataFrame:
+    """C1 + C2: add one archetype column per ``{out_col: names}`` entry,
+    ``names`` being SQL for an array of card names.
 
     The reference classifies over non-empty names only
     (scripts/etl_snapshot_topn.py:287-288 filters falsy names before
-    calling ``classify_deck``) — mirror that here.
+    calling ``classify_deck``). Those names, then their elixir costs, are
+    staged as helper columns, so the rules share one copy of each; the
+    optimizer keeps the stages apart because each is read more than once.
     """
-    names = F.filter(
-        F.coalesce(card_names, F.array()),
-        lambda n: n.isNotNull() & (n != ""),
-    )
-    return classify(
-        deck_features(names, elixir_by_name, bait_by_name, spam_by_name, tank_by_name),
-        names,
+    names = {k: f"_names_{k}" for k in card_names}
+    elixirs = {k: f"_elixirs_{k}" for k in card_names}
+    return (
+        df.withColumns({
+            names[k]: F.expr(
+                f"filter(coalesce({v}, array()), n -> n IS NOT NULL AND n != '')"
+            )
+            for k, v in card_names.items()
+        })
+        .withColumns({
+            elixirs[k]: F.expr(
+                f"array_compact(transform({names[k]}, "
+                f"n -> element_at({maps['elixir_by_name']}, n)))"
+            )
+            for k in card_names
+        })
+        .withColumns({
+            k: F.expr(_classify(names[k], elixirs[k], maps)) for k in card_names
+        })
+        .drop(*names.values(), *elixirs.values())
     )
 
 
@@ -181,22 +169,21 @@ def classify_cards(card_names: Column, elixir_by_name: Column,
 # Catalog → broadcastable map literals
 # ---------------------------------------------------------------------------
 
-def catalog_maps(catalog: DataFrame) -> dict[str, Column]:
-    """Collect the (tiny, ≤121-row) card catalog into map literals.
+def catalog_maps(catalog: DataFrame) -> dict[str, str]:
+    """Collect the (tiny, ≤121-row) card catalog into SQL map literals.
 
     The catalog is the reference's in-process dict
     (src/analysist/deck_type.py:12-16; src/clashdb/card_metadata.py:11-17).
     As map *literals* the lookups are pure expressions — no join, no
-    shuffle, constant-folded into codegen; at 100 TB this is strictly
-    better than even a broadcast join for a 121-entry dimension.
+    shuffle, constant-folded into the plan; at 100 TB this is strictly
+    better than even a broadcast join for a 121-entry dimension. Each
+    map is SQL text, spliced into the expressions that read it, so the
+    JVM parser builds the literal tree with the expression around it.
     """
     rows = catalog.select(
         "id", "name", "elixir", "is_big_tank", "is_bait_piece", "is_bridge_spam_piece"
     ).collect()
 
-    # One `F.expr("map(...)")` per map instead of ~240 `F.lit` Column
-    # objects: the literal tree is built by the JVM SQL parser in a
-    # single py4j round-trip instead of hundreds.
     def _sql_lit(v) -> str:
         if isinstance(v, bool):
             return "TRUE" if v else "FALSE"
@@ -205,15 +192,15 @@ def catalog_maps(catalog: DataFrame) -> dict[str, Column]:
         s = str(v).replace("\\", "\\\\").replace("'", "\\'")
         return f"'{s}'"
 
-    def _map(pairs) -> Column:
+    def _map(pairs) -> str:
         items = [
             f"{_sql_lit(k)}, {_sql_lit(v)}"
             for k, v in pairs
             if k is not None and v is not None
         ]
         if not items:
-            return F.map_from_arrays(F.array(), F.array())
-        return F.expr("map(" + ", ".join(items) + ")")
+            return "map_from_arrays(array(), array())"
+        return "map(" + ", ".join(items) + ")"
 
     return {
         "name_by_id": _map((r["id"], r["name"]) for r in rows),

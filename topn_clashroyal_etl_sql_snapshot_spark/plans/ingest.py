@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from ..operators import dedup, sampling
-from ..session import inherit_thread_target as _pool_inherit
+from ..session import run_concurrently
 from ..sinks import shards as shard_sink
 from ..sinks import snapshot as snap
 
@@ -470,8 +470,6 @@ def run_daily_ingest(
     if vec_col is None:
         surv_sigs, pairs = _minhash_leg()
     else:
-        from concurrent.futures import ThreadPoolExecutor
-
         from ..operators import similarity
 
         # ONE sketch pass for the day: the probe consumes it here and
@@ -501,14 +499,9 @@ def run_daily_ingest(
             )
             return sk, sp
 
-        # session-form property/tag inheritance for the pool threads
-        # (see _pool_inherit)
-        _inherit = _pool_inherit(spark)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            mh_f = pool.submit(_inherit(_minhash_leg))
-            sem_f = pool.submit(_inherit(_semantic_leg))
-            surv_sigs, pairs = mh_f.result()
-            surv_sketches, sem_pairs = sem_f.result()
+        (surv_sigs, pairs), (surv_sketches, sem_pairs) = run_concurrently(
+            spark, [_minhash_leg, _semantic_leg]
+        )
         pairs = (
             pairs.select("id1", "id2")
             .unionByName(sem_pairs.select("id1", "id2"))
@@ -723,8 +716,6 @@ def run_daily_ingest(
         # deltas over to_index, the keeper merge over labels1) then
         # read stored blocks, never racing a concurrent first
         # materialization of the same marked RDD.
-        from concurrent.futures import ThreadPoolExecutor
-
         def _append(name, delta, compact_fn=None):
             modes[name] = snap.publish_append_state(
                 spark,
@@ -765,21 +756,11 @@ def run_daily_ingest(
                     weight_col=shard_weight_col,
                 )
             )
-        # session-form property/tag inheritance for the write pool:
-        # without it the write jobs launched from pool threads would
-        # carry empty Spark local properties — a caller's
-        # cancelJobGroup (or the streaming run's cancellation) would
-        # never reach them (r15 review finding; see _pool_inherit)
-        _inherit = _pool_inherit(spark)
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            for wave in (wave1, wave2):
-                # .result() re-raises the first failure — a failed
-                # state write must abort the publish, same as r14's
-                # sequential form
-                for fut in [
-                    pool.submit(_inherit(fn)) for fn in wave
-                ]:
-                    fut.result()
+        # run_concurrently re-raises the first failure once the wave is
+        # done — a failed state write must abort the publish, same as
+        # r14's sequential form
+        for wave in (wave1, wave2):
+            run_concurrently(spark, wave)
         if vec_col is not None:
             # re-stamp each day: the append form links only part files
             from ..operators.similarity import write_sketch_layout

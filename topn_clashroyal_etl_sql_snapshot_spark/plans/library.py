@@ -69,17 +69,13 @@ def summarize_deck_types(
     maps = deck_ops.catalog_maps(catalog)
 
     def side_stats(cards_col: str, flip: bool) -> DataFrame:
-        cls = deck_ops.classify_cards(
-            F.col(cards_col),
-            maps["elixir_by_name"],
-            maps["bait_by_name"],
-            maps["spam_by_name"],
-            maps["tank_by_name"],
-        )
         win_res, loss_res = ("loss", "win") if flip else ("win", "loss")
         agg = (
-            normalized.filter(F.size(F.col(cards_col)) == 8)
-            .withColumn("type", cls)
+            deck_ops.classify_cards(
+                normalized.filter(F.size(F.col(cards_col)) == 8),
+                {"type": cards_col},
+                maps,
+            )
             .groupBy("type")
             .agg(
                 F.count(F.lit(1)).alias("games"),

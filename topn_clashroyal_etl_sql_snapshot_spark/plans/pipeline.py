@@ -6,13 +6,13 @@ Re-expresses the reference's single-threaded accumulator loop
     read landing JSON
       → ranked-1v1 filter (B1)
       → match-hash dedup (B9 + D2, deterministic first-pick)
-      → deck extraction/validation both sides (B6)
+      → deck validation (B6) on the raw cards, then extraction
       → deck hash (B8) + classification (C1-C3, override-aware)
-      → matchup matrix (E6) from the battle grain
       → unpivot to participant grain (D1) + win flag (B7)
-      → materialize participants (localCheckpoint)
-      → materialize the shared grains (localCheckpoint)
-      → dims (D3-D6) + rollups (E1-E5)
+      → materialize participants (localCheckpoint), beside the
+        leaderboard guard
+      → materialize the shared grains (localCheckpoint), at once
+      → dims (D3-D6) + rollups (E1-E5) + matchup matrix (E6)
 
 Scale notes (the 100 TB story):
 - The battle→participant core is ONE pass; ``participants`` is
@@ -21,17 +21,30 @@ Scale notes (the 100 TB story):
 - The three shared grains are materialized the same way, so AQE
   coalesces each one's final shuffle and every table write downstream
   runs a few right-sized tasks, not ``spark.sql.shuffle.partitions``.
+- Materializations that do not depend on each other are submitted at
+  once (:func:`~..session.run_concurrently`): the leaderboard guard
+  with the core's checkpoint job, then the three grain checkpoints. A
+  job's tasks fill the cores another's stage tail leaves idle, and the
+  driver-side planning of one overlaps the others' execution.
 - The card catalog and overrides are tiny dimensions → map literals /
   broadcast joins; nothing here shuffles except the groupBys themselves
   and the two first-seen windows (match dedup, deck dim), both keyed on
   high-cardinality content hashes → near-uniform shuffle distribution, no
   skew. AQE handles residual skew.
-- All expressions are built-in column algebra — zero Python UDFs → the
-  whole plan stays in whole-stage codegen.
+- All expressions are built-in Catalyst expressions — zero Python UDFs,
+  so the plan runs in the JVM. Not all of it in whole-stage codegen: a
+  ``Project`` holding a lambda (the deck extraction, hash and
+  classifier, the match hash) runs interpreted, as do the E7
+  ``CollectMetrics`` nodes. So the core builds each lambda once: the
+  derived arrays several rules read (a deck's card names, their elixir
+  costs) are staged as columns, and each derived column is one parsed
+  SQL expression, which also keeps plan construction to a few py4j
+  round trips per column.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -39,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import exprs
 from ..operators import deck as deck_ops
+from ..session import run_concurrently
 
 # Tables produced by one snapshot refresh (+ deck_type_overrides preserved
 # separately — scripts/etl_snapshot_topn.py:162-182 excludes it from truncate).
@@ -176,24 +190,25 @@ def deduped_battles(ranked: DataFrame) -> DataFrame:
 def extracted_battles(deduped: DataFrame, maps: dict) -> DataFrame:
     """Structural validation + B6 deck extraction (scripts:263-282):
     both tags non-empty, both decks valid, else the whole battle is
-    discarded."""
+    discarded. Validity is tested on the raw cards, so each side's
+    observation array is built once, by the projection, for the battles
+    that pass."""
+    team, opp = "team[0].cards", "opponent[0].cards"
     return (
-        deduped.select(
+        deduped.filter(
+            F.expr(f"{deck_ops.valid_deck(team)} AND {deck_ops.valid_deck(opp)}")
+        )
+        .select(
             "match_hash",
             "battleTime",
             exprs.normalize_tag(F.col("team")[0]["tag"]).alias("team_tag"),
             exprs.normalize_tag(F.col("opponent")[0]["tag"]).alias("opp_tag"),
-            F.coalesce(F.col("team")[0]["crowns"], F.lit(0)).alias("team_crowns"),
-            F.coalesce(F.col("opponent")[0]["crowns"], F.lit(0)).alias("opp_crowns"),
-            deck_ops.extract_deck(F.col("team")[0]["cards"], maps["name_by_id"]).alias(
-                "team_obs"
-            ),
-            deck_ops.extract_deck(
-                F.col("opponent")[0]["cards"], maps["name_by_id"]
-            ).alias("opp_obs"),
+            F.expr("coalesce(team[0].crowns, 0) AS team_crowns"),
+            F.expr("coalesce(opponent[0].crowns, 0) AS opp_crowns"),
+            F.expr(deck_ops.deck_obs(team, maps["name_by_id"])).alias("team_obs"),
+            F.expr(deck_ops.deck_obs(opp, maps["name_by_id"])).alias("opp_obs"),
         )
         .filter((F.col("team_tag") != "") & (F.col("opp_tag") != ""))
-        .filter(F.col("team_obs").isNotNull() & F.col("opp_obs").isNotNull())
     )
 
 
@@ -243,31 +258,13 @@ def participant_rows(
     extracted = counted(extracted_battles(deduped, maps), "valid_battles")
 
     # --- B8 hash + C1-C3 classify (override beats classifier) -----------
-    def _names(obs_col: str):
-        return F.filter(
-            F.transform(F.col(obs_col), lambda o: o["card_name"]),
-            lambda n: n.isNotNull() & (n != ""),
-        )
-
-    classified = extracted.withColumns(
-        {
-            "team_dh": deck_ops.deck_hash_from_obs(F.col("team_obs")),
-            "opp_dh": deck_ops.deck_hash_from_obs(F.col("opp_obs")),
-            "team_cls": deck_ops.classify_cards(
-                _names("team_obs"),
-                maps["elixir_by_name"],
-                maps["bait_by_name"],
-                maps["spam_by_name"],
-                maps["tank_by_name"],
-            ),
-            "opp_cls": deck_ops.classify_cards(
-                _names("opp_obs"),
-                maps["elixir_by_name"],
-                maps["bait_by_name"],
-                maps["spam_by_name"],
-                maps["tank_by_name"],
-            ),
-        }
+    classified = deck_ops.classify_cards(
+        extracted.withColumns({
+            "team_dh": F.expr(deck_ops.deck_hash_from_obs("team_obs")),
+            "opp_dh": F.expr(deck_ops.deck_hash_from_obs("opp_obs")),
+        }),
+        {"team_cls": "team_obs.card_name", "opp_cls": "opp_obs.card_name"},
+        maps,
     )
 
     # Override application (C3, scripts:290-291) — broadcast left joins.
@@ -283,35 +280,21 @@ def participant_rows(
         .join(F.broadcast(ov), F.col("opp_dh") == F.col("_ov_dh"), "left")
         .withColumn("opp_dtype", F.coalesce(F.col("_ov_type"), F.col("opp_cls")))
         .drop("_ov_dh", "_ov_type")
-        .withColumn("team_won", F.col("team_crowns") > F.col("opp_crowns"))
-        .withColumn("opp_won", F.col("opp_crowns") > F.col("team_crowns"))
     )
+
+    # D1 unpivot: each battle → one row per side, with B7's win flag
+    def side(i: int, me: str, them: str) -> str:
+        return (
+            f"named_struct('side', {i}, 'player_tag', {me}_tag, "
+            f"'deck_hash', {me}_dh, 'deck_type', {me}_dtype, "
+            f"'opp_deck_type', {them}_dtype, 'obs', {me}_obs, "
+            f"'won', {me}_crowns > {them}_crowns)"
+        )
 
     participants = battles_core.select(
         "match_hash",
         "battleTime",
-        F.inline(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("side"),
-                    F.col("team_tag").alias("player_tag"),
-                    F.col("team_dh").alias("deck_hash"),
-                    F.col("team_dtype").alias("deck_type"),
-                    F.col("opp_dtype").alias("opp_deck_type"),
-                    F.col("team_obs").alias("obs"),
-                    F.col("team_won").alias("won"),
-                ),
-                F.struct(
-                    F.lit(1).alias("side"),
-                    F.col("opp_tag").alias("player_tag"),
-                    F.col("opp_dh").alias("deck_hash"),
-                    F.col("opp_dtype").alias("deck_type"),
-                    F.col("team_dtype").alias("opp_deck_type"),
-                    F.col("opp_obs").alias("obs"),
-                    F.col("opp_won").alias("won"),
-                ),
-            )
-        ),
+        F.expr(f"inline(array({side(0, 'team', 'opp')}, {side(1, 'opp', 'team')}))"),
     )
     return participants, observed
 
@@ -331,10 +314,6 @@ def build_snapshot(
     from the core's checkpoint job: no extra action, and reading them
     starts no job. ``collect_counters`` therefore has no effect; it is
     kept only because ``perfbench/workloads.py`` passes it."""
-    maps = deck_ops.catalog_maps(catalog)
-
-    player = top_players_df(leaderboard, top_n)
-
     # --- D1 unpivot to participant grain + materialize -------------------
     # localCheckpoint, not persist (r17, guide §3.3 "materialising an
     # intermediate truncates the plan"): the parse/dedup/classify
@@ -351,8 +330,18 @@ def build_snapshot(
     # The lazy construction lives in :func:`participant_rows` so the
     # physical-plan pins (single shuffle, broadcast dims) can still see
     # the pre-checkpoint lineage.
-    core, observed = participant_rows(battles, maps, overrides)
-    participants = core.localCheckpoint(eager=True)
+    #
+    # The leaderboard guard's count() (top_players_df) needs nothing
+    # from the core, so it runs beside the core's construction and
+    # checkpoint job instead of ahead of them.
+    def materialized_core():
+        maps = deck_ops.catalog_maps(catalog)
+        core, observed = participant_rows(battles, maps, overrides)
+        return core.localCheckpoint(eager=True), observed
+
+    player, (participants, observed) = run_concurrently(
+        spark, [lambda: top_players_df(leaderboard, top_n), materialized_core]
+    )
     counters = {k: int(o.get["n"]) for k, o in observed.items()}
 
     # --- shared rollup grains (r17, guide §2.3/§2.4) ----------------------
@@ -378,11 +367,9 @@ def build_snapshot(
     # partitions at snapshot scale), whereas an InMemoryRelation keeps
     # all ``spark.sql.shuffle.partitions`` and every write stage
     # reading it ran that many tasks (and wrote that many files).
-    type_grain = (
-        participants.groupBy("deck_type", "opp_deck_type", "deck_hash")
-        .agg(*_uses_wins())
-        .localCheckpoint(eager=True)
-    )
+    type_grain = participants.groupBy(
+        "deck_type", "opp_deck_type", "deck_hash"
+    ).agg(*_uses_wins())
     card_grain = (
         participants.select("deck_type", "won", F.explode("obs").alias("c"))
         .groupBy(
@@ -392,23 +379,8 @@ def build_snapshot(
             F.col("c.card_name").alias("card_name"),
         )
         .agg(*_uses_wins())
-        .localCheckpoint(eager=True)
     )
 
-    def _sum_uses_wins():
-        return [F.sum("uses").alias("uses"), F.sum("wins").alias("wins")]
-
-    # --- E6 matchup matrix (both perspectives) ---------------------------
-    # Each deduped match inserts TWO directional rows (scripts:296-302);
-    # G5's `meta == 2×matches` invariant depends on it. The participant
-    # grain IS that double-insert (side 0 = team perspective, side 1 =
-    # opponent perspective), so the matrix is one aggregate over the
-    # shared type grain — no second pass over the battle grain.
-    meta_type_matchups = type_grain.groupBy("deck_type", "opp_deck_type").agg(
-        *_sum_uses_wins()
-    )
-
-    # --- dims -------------------------------------------------------------
     # First-seen-wins deck dim (D4, scripts:312-314): deterministic pick =
     # min over (battleTime, match_hash, side). Classifier+overrides are
     # hash-deterministic so deck_type is identical across observations;
@@ -425,8 +397,32 @@ def build_snapshot(
         participants.withColumn("_rn", F.row_number().over(first_seen))
         .filter(F.col("_rn") == 1)
         .select("deck_hash", "deck_type", "obs")
-        .localCheckpoint(eager=True)
     )
+
+    # The three checkpoints each scan the materialized core and none
+    # needs another, so their jobs run at once.
+    type_grain, card_grain, deck_first = run_concurrently(
+        spark,
+        [
+            functools.partial(df.localCheckpoint, eager=True)
+            for df in (type_grain, card_grain, deck_first)
+        ],
+    )
+
+    def _sum_uses_wins():
+        return [F.sum("uses").alias("uses"), F.sum("wins").alias("wins")]
+
+    # --- E6 matchup matrix (both perspectives) ---------------------------
+    # Each deduped match inserts TWO directional rows (scripts:296-302);
+    # G5's `meta == 2×matches` invariant depends on it. The participant
+    # grain IS that double-insert (side 0 = team perspective, side 1 =
+    # opponent perspective), so the matrix is one aggregate over the
+    # shared type grain — no second pass over the battle grain.
+    meta_type_matchups = type_grain.groupBy("deck_type", "opp_deck_type").agg(
+        *_sum_uses_wins()
+    )
+
+    # --- dims -------------------------------------------------------------
     decks = deck_first.select("deck_hash", "deck_type")
     deck_cards = deck_first.select(
         "deck_hash", F.explode("obs").alias("c")

@@ -13,6 +13,8 @@ is chosen so the same code scales to a multi-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -75,3 +77,23 @@ def inherit_thread_target(spark: SparkSession):
     if not callable(wrapper) or wrapper is spark:
         return lambda fn: fn
     return wrapper
+
+
+def run_concurrently(spark: SparkSession, thunks: Sequence[Callable]) -> list:
+    """Run every thunk at once, one thread each, and return their results
+    in order. Their Spark jobs then share the FIFO scheduler: one job's
+    tasks fill the cores another's stage tail leaves idle, and their
+    driver-side planning overlaps instead of adding up.
+
+    Each thunk runs under the caller's Spark local properties and session
+    tags (:func:`inherit_thread_target`, wrapped per thunk so each thread
+    gets its own copy of the properties), so its jobs carry the caller's
+    job group and are cancelled with it. Waits for EVERY thunk, also when
+    one fails, then raises the first failure in submission order: no
+    caller sees an error while a sibling job is still running."""
+    if not thunks:
+        return []
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inherit_thread_target(spark)(fn)) for fn in thunks]
+    # leaving the block joined every thread, failed or not
+    return [f.result() for f in futures]

@@ -34,13 +34,13 @@ larger cluster gets more task slots, not more driver threads.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 
-from ..session import inherit_thread_target
+from ..session import run_concurrently
 
 
 # Dashboard reads filter these by archetype — partition pruning replaces
@@ -55,11 +55,10 @@ def write_snapshot(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
     """Write every table under ``warehouse_dir/<name>/`` in overwrite
     mode, partitioned per :data:`PARTITION_KEYS`.
 
-    Every table's write is submitted at once, one pool thread per
-    table, and Spark's FIFO scheduler queues their tasks. Each thread
-    runs under the caller's Spark local properties and session tags
-    (:func:`~..session.inherit_thread_target`), so the publish's jobs
-    carry the caller's job group and are cancelled with it.
+    Every table's write is submitted at once, one thread per table
+    (:func:`~..session.run_concurrently`), and Spark's FIFO scheduler
+    queues their tasks. The writes' jobs carry the caller's job group
+    and session tags, and are cancelled with it.
 
     Returns only after EVERY write has finished, also when one fails:
     the first failure in table order is raised once no sibling write
@@ -76,12 +75,9 @@ def write_snapshot(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
         writer.parquet(os.path.join(warehouse_dir, name))
 
     session = next(iter(tables.values())).sparkSession
-    target = inherit_thread_target(session)(write)
-    # leaving the block joins every thread, failed or not
-    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        futures = [pool.submit(target, n, df) for n, df in tables.items()]
-    for fut in futures:
-        fut.result()
+    run_concurrently(
+        session, [functools.partial(write, n, df) for n, df in tables.items()]
+    )
 
 
 def write_snapshot_atomic(tables: dict[str, DataFrame], warehouse_dir: str) -> None:
