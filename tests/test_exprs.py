@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from topn_clashroyal_etl_sql_snapshot_spark.functions import exprs
 from topn_clashroyal_etl_sql_snapshot_spark.sources.schemas import BATTLE_SCHEMA
+from topn_clashroyal_etl_sql_snapshot_spark.testing.cr_synthetic import py_normalize_tag
 
 
 # ---------------------------------------------------------------------------
@@ -59,6 +60,14 @@ def test_normalize_tag(spark):
     df = spark.createDataFrame(rows, ["tag"])
     got = [r[0] for r in df.select(exprs.normalize_tag(F.col("tag"))).collect()]
     assert got == ["#ABC123", "#XYZ", "", "", "#LO9", "#P"]
+    # Non-ASCII tags take the JVM case mapping (``get_spark`` turns ICU
+    # case mapping off); in a non-Turkic default locale it agrees with
+    # Python's ``str.upper``, including expansions (ß → SS, ﬁ → FI, ΐ)
+    # and the dotted/dotless i.
+    tags = ["ß", "straße", "ǆ", "éclair", "ﬁx", "ı", "i\u0307", "ΐ"]
+    df = spark.createDataFrame([(t,) for t in tags], ["tag"])
+    got = [r[0] for r in df.select(exprs.normalize_tag(F.col("tag"))).collect()]
+    assert got == [py_normalize_tag(t) for t in tags]
 
 
 def test_ladder_value(spark):

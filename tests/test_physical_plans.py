@@ -143,6 +143,23 @@ def test_fanout_reads_persisted_cores(spark, snapshot, tmp_path):
         assert 0 < len(files) < partitions, (name, files)
 
 
+def test_case_mapping_takes_jvm_path(spark):
+    """``get_spark`` turns ICU case mapping off, so ``upper``/``lower``
+    compile to the ``UTF8_BINARY`` JVM path (ASCII fast path, else
+    ``String.toUpperCase()``/``toLowerCase()``). The ICU path's first
+    call in a JVM builds a title-case table over every code point, a
+    fixed cost each cold refresh would pay in its match-hash stage. The
+    input is a column, not a literal, so constant folding keeps the call."""
+    df = spark.range(1).select(F.col("id").cast("string").alias("s"))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.select(F.upper("s"), F.lower("s")).explain("codegen")
+    code = buf.getvalue()
+    assert "CollationSupport.Upper.execBinary(" in code, code
+    assert "CollationSupport.Lower.execBinary(" in code, code
+    assert "execBinaryICU" not in code, code
+
+
 def test_participants_single_shuffle_lineage(spark):
     """The participant construction (pre-checkpoint lineage, exposed as
     ``participant_rows``) contains exactly ONE shuffle Exchange — the

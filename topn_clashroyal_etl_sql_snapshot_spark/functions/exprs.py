@@ -37,7 +37,11 @@ def normalize_tag(col: Column) -> Column:
     """strip → upper → ensure leading ``#``; null/empty → ``""``.
 
     Mirrors ``scripts/etl_snapshot_topn.py:32-37`` (and its duplicate at
-    ``src/api/battles.py:6-17``).
+    ``src/api/battles.py:6-17``). ``upper`` takes the JVM case-mapping
+    path (``session.get_spark`` turns ICU case mapping off): an ASCII
+    fast path, else ``String.toUpperCase()`` in the JVM's default locale,
+    which matches Python's ``str.upper`` except under a Turkish or Azeri
+    default locale (``i`` → ``İ``).
     """
     t = F.upper(F.trim(F.coalesce(col, F.lit(""))))
     return F.when(t == "", t).otherwise(
@@ -151,7 +155,10 @@ def _side_payload(side: Column) -> Column:
     Mirrors ``side_payload`` (``src/clashdb/hash_utils.py:44-55``). Struct
     field order is (crowns, tag) — alphabetical — to match
     ``json.dumps(sort_keys=True)`` key order; the sort is by tag via an
-    explicit comparator (reference sorts by tag only).
+    explicit comparator (reference sorts by tag only). ``upper`` is the
+    JVM path, as in :func:`normalize_tag`. This is the refresh's first
+    case mapping: with ICU case mapping on, its first call per JVM would
+    build ICU's title-case table inside the scan → match-hash stage.
     """
     payload = F.transform(
         F.coalesce(side, F.array()),

@@ -8,6 +8,23 @@ is chosen so the same code scales to a multi-executor cluster:
   cluster this is overridden (or left to AQE's coalescing).
 - Arrow enabled so the few Pandas-UDF code paths (multimodal decode)
   batch-transfer instead of pickling rows.
+- ICU case mapping off (``spark.sql.icu.caseMappings.enabled=false``), so
+  every ``upper``/``lower`` takes Spark's ``UTF8_BINARY`` JVM path, as in
+  Spark 3.x: an ASCII fast path, else ``String.toUpperCase()`` /
+  ``toLowerCase()`` in the JVM's default locale. Under a Turkish or Azeri
+  default locale that maps ``i``/``I`` to the dotted/dotless forms, so run
+  the JVM in a neutral locale (``-Duser.language=en``) there. With ICU on
+  (the 4.1 default), the first case mapping in a JVM runs
+  ``CollationAwareUTF8String.<clinit>``, which calls ICU's
+  ``toTitleCase`` on all 1,114,112 code points to build a table
+  ``upper``/``lower`` never read. A cold refresh met it inside the
+  scan → match-hash stage: 10.8% of executor samples in a JFR profile,
+  and as a class initializer it holds every other task thread that
+  reaches ``upper``. Measured on 4 vCPU with the perfbench input: that
+  stage, run alone in a fresh JVM, went from 9.0–9.9 s to 6.3–7.5 s of
+  task time (2.8–3.1 s → 2.2–2.5 s wall), and a cold
+  ``snapshot_refresh`` op from 12.36 to 11.68 s median over ten
+  alternating pairs. Warm sessions do not move.
 """
 
 from __future__ import annotations
@@ -46,6 +63,9 @@ def get_spark(
         # wide-aggregate plans (64-column sketch/fingerprint sums) drop
         # out of whole-stage codegen at the default 100-field cap
         .config("spark.sql.codegen.maxFields", "300")
+        # JVM case mapping for upper/lower: skips ICU's per-JVM title-case
+        # table build, ~3 s of a cold refresh's task time (module notes)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
