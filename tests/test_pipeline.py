@@ -162,7 +162,7 @@ def test_top_players_rejects_table_scale_input(spark):
     anything larger must be refused, not silently serialized."""
     import pytest
 
-    big = spark.range(20).selectExpr(
+    big = spark.range(pipeline.MAX_LEADERBOARD_ROWS + 1).selectExpr(
         "concat('#P', id) AS tag",
         "'n' AS name",
         "CAST(id AS INT) AS rank",
@@ -170,7 +170,7 @@ def test_top_players_rejects_table_scale_input(spark):
         "CAST(1000 - id AS INT) AS trophies",
     )
     with pytest.raises(ValueError, match="single-partition window"):
-        pipeline.top_players_df(big, top_n=5, max_rows=10)
+        pipeline.top_players_df(big, top_n=5)
 
 
 def test_player_battles_fact(snapshot):

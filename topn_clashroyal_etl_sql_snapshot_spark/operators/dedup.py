@@ -30,12 +30,14 @@ and touches the index only through a broadcast of the maybe set —
 identical admitted rows, no index shuffle.
 
 Scale design: every step is per-row column algebra or a key-partitioned
-join — no driver-side state, no Python UDFs. The LSH/simhash candidate
-joins shuffle on band/chunk keys; hot buckets (boilerplate shingles) are
-the skew risk, so the inverted-index paths drop shingles whose document
-frequency exceeds ``max_df`` and the banded/pigeonhole self-joins drop
-(band, bucket) keys over ``max_bucket`` — boilerplate contributes
-candidates quadratically while carrying no dedup signal.
+join — no driver-side state, no Python UDFs. Every candidate join — the
+inverted-index shingle self-join, the LSH band join, the pigeonhole
+chunk join, and each family's batch-against-index probe — is
+:mod:`.buckets`' key-pair join behind its hot-key cap: ``max_df`` on
+shingles, ``max_bucket`` on (band, bucket) and (chunk, val) keys.
+Boilerplate contributes candidates quadratically while carrying no
+dedup signal; the cap's recall contract is written once, in
+:mod:`.buckets`.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from ..functions.litarrays import lit_longs
+from . import buckets
 
 _WIDE_PLAN_NODES = (
     "Join", "Aggregate", "Window", "Deduplicate", "Repartition",
@@ -1143,20 +1146,6 @@ def hashed_postings(
     return p.localCheckpoint(eager=False)
 
 
-def _checkpointed_once(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=False)`` unless the frame already IS a
-    bare checkpoint/RDD (its analyzed plan is a single LogicalRDD
-    node) — re-checkpointing an already-materialized frame stores a
-    second full copy of its rows in block storage for nothing (review
-    finding: simhash_verified_pairs checkpoints its candidate frame
-    for the plan-choice count, and the verifier then checkpointed the
-    3.2M-pair frame AGAIN)."""
-    plan = df._jdf.queryExecution().analyzed().toString().strip()
-    if plan.startswith("LogicalRDD") and "\n" not in plan:
-        return df
-    return df.localCheckpoint(eager=False)
-
-
 def true_jaccard_for_pairs(
     cands: DataFrame,
     postings: DataFrame,
@@ -1177,14 +1166,14 @@ def true_jaccard_for_pairs(
     # checkpoint it so the candidate generator's join runs once — unless
     # the caller already materialized it. Small by contract — every
     # generator here is bucketed, never all-pairs.
-    cands = _checkpointed_once(cands)
+    cands = buckets.checkpointed_once(cands)
     cand_ids = (
         cands.select(F.col("id1").alias("id"))
         .unionAll(cands.select(F.col("id2").alias("id")))
         .distinct()
     )
     postings = postings.join(cand_ids, "id", "left_semi")
-    sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     # LENGTH FILTER (AllPairs/PPJoin's first prune, r12; OPT-IN since
     # r13): jaccard ≥ t bounds the set-size ratio — even when the
     # smaller set is fully contained, j = min/max — so pairs with
@@ -1204,8 +1193,8 @@ def true_jaccard_for_pairs(
     if length_filter:
         sized = (
             sized
-            .join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-            .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
+            .join(sizes.withColumnsRenamed({"id": "id1", "n": "n1"}), "id1")
+            .join(sizes.withColumnsRenamed({"id": "id2", "n": "n2"}), "id2")
             .filter(
                 F.least("n1", "n2").cast("double")
                 >= F.lit(float(threshold)) * F.greatest("n1", "n2")
@@ -1222,18 +1211,8 @@ def true_jaccard_for_pairs(
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    # set sizes join AFTER the intersection count: inter holds only
-    # pairs that share ≥1 shingle, far fewer rows than the candidate
-    # list on imprecise screens, and the per-doc sizes frame is tiny
-    # (AQE broadcasts it)
     return (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
-        )
+        buckets.with_jaccard(inter, sizes)
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
@@ -1261,7 +1240,7 @@ def true_jaccard_for_pairs_dense(
     :func:`simhash_verified_pairs` now skips the screen entirely in
     the dense regime. Candidates must carry ``id1 < id2`` (every
     generator here does)."""
-    cands = _checkpointed_once(cands)
+    cands = buckets.checkpointed_once(cands)
     cand_ids = (
         cands.select(F.col("id1").alias("id"))
         .unionAll(cands.select(F.col("id2").alias("id")))
@@ -1270,22 +1249,8 @@ def true_jaccard_for_pairs_dense(
     p = postings.join(cand_ids, "id", "left_semi").localCheckpoint(
         eager=False
     )  # sizes + both self-join sides
-    sizes = p.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        p.select(F.col("id").alias("id1"), "sh")
-        .join(p.select(F.col("id").alias("id2"), "sh"), "sh")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     jac = (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
-        )
+        buckets.key_set_jaccard(p, ["sh"])
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
@@ -1312,37 +1277,17 @@ def jaccard_pairs(
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
     Plan: postings → (optional) drop shingles with document frequency >
-    max_df (boilerplate: quadratic candidate blowup, no signal) →
-    self-join on shingle (id1 < id2) → intersection counts → join per-doc
-    set sizes → jaccard = |∩| / (|A|+|B|-|∩|). Integer counts + one double
-    division — oracle-exact across engines. Pass ``toks`` (a
+    max_df (the :mod:`.buckets` cap) → self-join on shingle (id1 < id2)
+    → intersection counts → join per-doc set sizes → jaccard = |∩| /
+    (|A|+|B|-|∩|) (:func:`.buckets.key_set_jaccard`). Pass ``toks`` (a
     ``token_arrays`` result) to share one tokenize scan with the other
     dedup families.
     """
-    postings = hashed_postings(docs, text_col, id_col, n, toks=toks)
-    if max_df is not None:
-        df_counts = postings.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
-        postings = (
-            postings.join(df_counts.filter(F.col("_df") <= max_df), "sh", "left_semi")
-        )
-    sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    a = postings.select(F.col("id").alias("id1"), "sh")
-    b = postings.select(F.col("id").alias("id2"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    postings, _ = buckets.drop_hot_keys(
+        hashed_postings(docs, text_col, id_col, n, toks=toks), ["sh"], max_df
     )
     return (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
-        )
+        buckets.key_set_jaccard(postings, ["sh"])
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
@@ -1466,30 +1411,6 @@ def _banded(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
-def _hot_buckets(
-    banded: DataFrame,
-    max_bucket: int,
-    keys: tuple[str, str] = ("band", "bucket"),
-) -> DataFrame:
-    """Join keys whose population EXCEEDS ``max_bucket`` — the shared
-    hot-bucket guard of every bucketed candidate join (LSH (band,
-    bucket) and the pigeonhole (chunk, val) alike). Anti-joining this
-    HOT set beats semi-joining its cold complement: hot keys number at
-    most ``rows/max_bucket`` (each holds > max_bucket rows), so the
-    anti-join's build side is model-sized and AQE turns it into a
-    broadcast at runtime — two fewer O(keys·n) exchanges than the
-    cold-side semi-join (A/B'd r10: cost-neutral at sf0.1, strictly
-    fewer shuffled rows at scale). No explicit broadcast hint: in the
-    pathological all-hot corpus the set degrades gracefully to a
-    shuffled join instead of OOMing the driver."""
-    return (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select(*keys)
-    )
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 32,
@@ -1507,21 +1428,11 @@ def lsh_candidate_pairs(
     Scale guard: a near-identical cluster of c documents (template
     pages, boilerplate with counters — routine in web crawls even
     after exact dedup) collides in most of its b bands, so the
-    self-join emits O(b·c²) candidate rows before the distinct — at
-    c = 10⁶ that is a ~10¹²-row shuffle from ONE cluster.
+    self-join emits O(b·c²) candidate rows before the distinct.
     ``max_bucket`` drops any (band, bucket) key holding more than the
-    cap before the self-join, bounding candidate volume at
-    Σ min(bucket, cap)² — the same contract as
-    ``simhash_candidate_pairs``' cap and ``jaccard_pairs``' max_df.
-    Recall: a pair is lost only if EVERY band it collides in is hot —
-    and a bucket is hot only when ≥ max_bucket documents share that
-    band slice, i.e. the pair sits inside a duplicate cluster already
-    larger than the cap, where any retained band (or the cluster's
-    own exact-dup collapse) still links it. Compose exact dedup FIRST
-    (``exact_dup_groups`` / ``content_fingerprint``) so identical
-    copies never reach the LSH join; the cap then only fires on
-    pathological near-identical floods. ``max_bucket=None`` restores
-    the unconditional join for small corpora.
+    cap before the self-join — the :mod:`.buckets` cap, whose recall
+    contract is written there. ``max_bucket=None`` restores the
+    unconditional join for small corpora.
 
     .. note:: **Behavior change (r10).** The cap is ON by default
        (10 000) here and in :func:`minhash_lsh_pairs` /
@@ -1540,14 +1451,8 @@ def lsh_candidate_pairs(
         # three consumers (bucket count + both self-join sides) — same
         # materialize-once trade as simhash_candidate_pairs' pieces
         banded = banded.localCheckpoint(eager=False)
-        banded = banded.join(
-            _hot_buckets(banded, max_bucket), ["band", "bucket"], "left_anti"
-        )
-    a = banded.select(F.col("id").alias("id1"), "band", "bucket")
-    b = banded.select(F.col("id").alias("id2"), "band", "bucket")
     return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id1") < F.col("id2"))
+        buckets.bucket_pairs(banded, ["band", "bucket"], max_bucket)
         .select("id1", "id2")
         .distinct()
     )
@@ -1601,10 +1506,8 @@ def minhash_lsh_verified_pairs(
     postings pairwise, so it survives boilerplate-heavy corpora at
     100 TB without a df cap — with ``max_bucket`` bounding the one
     remaining quadratic term, near-identical clusters piling into a
-    single (band, bucket) key (see :func:`lsh_candidate_pairs` for
-    the recall contract, the exact-dedup-first composition, and the
-    r10 behavior-change note — the cap is ON by default; pass
-    ``max_bucket=None`` for the exhaustive pre-r10 semantics). Pass
+    single (band, bucket) key (recall contract: :mod:`.buckets`; the
+    r10 behavior-change note: :func:`lsh_candidate_pairs`). Pass
     ``toks`` to share one tokenize scan with the other dedup
     families."""
     _check_banding(k, bands, rows_per_band)
@@ -1740,13 +1643,9 @@ def minhash_lsh_incremental(
 
     ``max_bucket`` is the same hot-bucket cap as
     :func:`lsh_candidate_pairs`, counted over the COMBINED
-    (batch ∪ index) population per (band, bucket) — exactly the
-    counts a full-corpus run would see, so the subset invariant above
-    holds cap-for-cap. Without it, one boilerplate cluster in a
-    100 TB index makes every colliding daily batch pay an
-    O(|cluster|·|batch∩bucket|) join; with it the index side of a hot
-    key is dropped before the join (recall contract and the
-    exact-dedup-first composition: see :func:`lsh_candidate_pairs`).
+    (batch ∪ index) population per (band, bucket), so the subset
+    invariant above holds cap-for-cap (recall contract:
+    :mod:`.buckets`).
 
     ``new_postings`` (a :func:`hashed_postings` frame for the batch)
     signs the batch from an ALREADY-SHINGLED scan instead of
@@ -1772,7 +1671,7 @@ def minhash_lsh_incremental(
     components pick a keeper as usual)."""
     _check_banding(k, bands, rows_per_band)
     sigs_new = (
-        _checkpointed_once(new_sigs)  # caller-injected: often already
+        buckets.checkpointed_once(new_sigs)  # caller-injected: often already
         if new_sigs is not None  # an eager checkpoint — don't double it
         else (
             minhash_signatures(k=k, postings=new_postings)
@@ -1789,25 +1688,11 @@ def minhash_lsh_incremental(
     )
     # ONE join covers both candidate classes (r10 rework — the earlier
     # two-join form shuffled the batch banding twice and ran two
-    # distincts): the right side is index ∪ batch with an _idx flag;
-    # batch-vs-index pairs keep every orientation (namespaces are
-    # disjoint by contract), within-batch pairs keep id1 < id2.
-    right = (
-        banded_idx.withColumn("_idx", F.lit(True))
-        .unionAll(banded_new.withColumn("_idx", F.lit(False)))
-        .withColumnRenamed("id", "id2")
-    )
-    if max_bucket is not None:
-        hot = _hot_buckets(
-            right.select(F.col("id2").alias("id"), "band", "bucket"),
-            max_bucket,
-        ).localCheckpoint(eager=False)
-        banded_new = banded_new.join(hot, ["band", "bucket"], "left_anti")
-        right = right.join(hot, ["band", "bucket"], "left_anti")
+    # distincts): the batch probes index ∪ batch
     cands = (
-        banded_new.withColumnRenamed("id", "id1")
-        .join(right, ["band", "bucket"])
-        .filter(F.col("_idx") | (F.col("id1") < F.col("id2")))
+        buckets.bucket_pairs(
+            banded_new, ["band", "bucket"], max_bucket, index=banded_idx
+        )
         .select("id1", "id2")
         .distinct()
     )
@@ -1918,16 +1803,16 @@ def simhash_chunks_for(
 
 
 def _simhash_pieces(fingerprints: DataFrame, chunks: int) -> DataFrame:
-    """(id, sh64, chunk, val): each 64-bit fingerprint exploded to its
-    pigeonhole chunk values — the shared bit-slicing of the self-join
-    and incremental paths (bits distribute as evenly as possible when
-    64 doesn't divide by ``chunks``)."""
+    """(id, h, chunk, val): each 64-bit fingerprint ``h`` exploded to
+    its pigeonhole chunk values — the shared bit-slicing of the
+    self-join and incremental paths (bits distribute as evenly as
+    possible when 64 doesn't divide by ``chunks``)."""
     base, extra = divmod(SIMHASH_BITS, chunks)
     widths = [base + (1 if j < extra else 0) for j in range(chunks)]
     offsets = [sum(widths[:j]) for j in range(chunks)]
     return fingerprints.select(
         "id",
-        "sh64",
+        F.col("sh64").alias("h"),
         F.explode(
             F.array(
                 *[
@@ -1941,7 +1826,44 @@ def _simhash_pieces(fingerprints: DataFrame, chunks: int) -> DataFrame:
                 ]
             )
         ).alias("c"),
-    ).select("id", "sh64", "c.chunk", "c.val")
+    ).select("id", "h", "c.chunk", "c.val")
+
+
+def _piece_variants(pieces: DataFrame, chunks: int) -> DataFrame:
+    """``piece_radius=1``'s expansion: each piece value exploded to
+    itself plus every single-bit flip WITHIN its piece width (widths
+    vary when 64 doesn't divide by chunks), so an equi-join against
+    unexpanded pieces catches pairs whose piece differs by ≤ 1 bit.
+    Variants are distinct, so a matching chunk contributes each
+    ordered pair exactly once. Applied to ONE join side, after the cap
+    (which counts unexpanded pieces)."""
+    base, extra = divmod(SIMHASH_BITS, chunks)
+    variants = F.expr(
+        f"concat(array(val), transform(sequence(0, {base} - 1 + "
+        f"(CASE WHEN chunk < {extra} THEN 1 ELSE 0 END)), "
+        "i -> val ^ shiftleft(CAST(1 AS BIGINT), i)))"
+    )
+    return pieces.select("id", "h", "chunk", F.explode(variants).alias("val"))
+
+
+def _hamming_pairs(joined: DataFrame, max_hamming: int) -> DataFrame:
+    """(id1, id2, hamming ≤ max_hamming) from a piece join's (id1, h1,
+    id2, h2) rows. The hamming filter runs BEFORE the distinct: the
+    xor+popcount is one codegen'd instruction per joined row, so
+    filtering first can only shrink the distinct's exchange. On
+    corpora where bucket collisions are mostly far pairs (random text)
+    this cuts the distinct input by orders of magnitude; on the
+    templated test-data corpus (r7 profile: 6.7M joined rows, most
+    already within radius) it measures neutral — never worse."""
+    return (
+        joined.select(
+            "id1",
+            "id2",
+            F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
 
 
 def simhash_candidate_pairs(
@@ -1981,14 +1903,11 @@ def simhash_candidate_pairs(
     drives ~n²/2^w in-bucket candidate volume as n grows — quadratic,
     plus shuffle skew on whatever chunk values the corpus's token
     distribution makes common. ``max_bucket`` drops any (chunk, value)
-    bucket holding more docs than the cap before the self-join, bounding
-    candidate volume at chunks·Σ min(bucket, cap)² and the join at
-    linear-in-n work. A dropped bucket can only lose pairs whose ONLY
-    shared chunk is that hot one — pairs at low hamming share several
-    chunks, so recall loss concentrates on the weakest candidates (same
-    contract as ``jaccard_pairs``'s max_df boilerplate cap). Set
-    ``max_bucket=None`` to recover the unconditional pigeonhole
-    guarantee on small corpora."""
+    bucket holding more docs than the cap before the self-join — the
+    :mod:`.buckets` cap, whose recall contract is written there; pairs
+    at low hamming share several chunks, so its losses concentrate on
+    the weakest candidates. Set ``max_bucket=None`` to recover the
+    unconditional pigeonhole guarantee on small corpora."""
     if piece_radius not in (0, 1):
         raise ValueError(
             f"piece_radius must be 0 or 1, got {piece_radius} (wider "
@@ -2010,43 +1929,15 @@ def simhash_candidate_pairs(
     # upstream fingerprint aggregation + chunk explode; materializing
     # chunks·N compact int rows once is the same trade hashed_postings
     # makes (r9, A/B'd: entry m3 4.93 → 3.27 s, results identical).
-    if max_bucket is not None:
-        hot = _hot_buckets(pieces, max_bucket, keys=("chunk", "val"))
-        pieces = pieces.join(hot, ["chunk", "val"], "left_anti")
-    a = pieces.select(F.col("id").alias("id1"), F.col("sh64").alias("h1"), "chunk", "val")
-    b = pieces.select(F.col("id").alias("id2"), F.col("sh64").alias("h2"), "chunk", "val")
+    probe, partners = buckets.drop_hot_keys(pieces, ["chunk", "val"], max_bucket)
     if piece_radius == 1:
-        # one side expands each piece value to identity + every
-        # single-bit flip WITHIN its piece width (widths vary when 64
-        # doesn't divide by chunks); the equi-join then catches pairs
-        # whose piece differs by ≤ 1 bit. Variants are distinct, so a
-        # matching chunk contributes each ordered pair exactly once.
-        # (A bare-id join + post-distinct fingerprint re-join was
-        # A/B'd here and LOST — 19.4 vs 14.7 s entry m3: the payload
-        # trim saves less than the unfiltered distinct + two extra
-        # joins cost.)
-        base, extra = divmod(SIMHASH_BITS, chunks)
-        variants = F.expr(
-            f"concat(array(val), transform(sequence(0, {base} - 1 + "
-            f"(CASE WHEN chunk < {extra} THEN 1 ELSE 0 END)), "
-            "i -> val ^ shiftleft(CAST(1 AS BIGINT), i)))"
-        )
-        b = b.select(
-            "id2", "h2", "chunk", F.explode(variants).alias("val")
-        )
-    return (
-        a.join(b, ["chunk", "val"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"))
-        # hamming filter BEFORE the distinct: the xor+popcount is one
-        # codegen'd instruction per joined row, so filtering first can
-        # only shrink the distinct's exchange. On corpora where bucket
-        # collisions are mostly far pairs (random text) this cuts the
-        # distinct input by orders of magnitude; on the templated
-        # driver corpus (r7 profile: 6.7M joined rows, most already
-        # within radius) it measures neutral — never worse.
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+        # (A bare-id join + post-distinct fingerprint re-join was A/B'd
+        # here and LOST — 19.4 vs 14.7 s entry m3: the payload trim
+        # saves less than the unfiltered distinct + two extra joins
+        # cost.)
+        probe = _piece_variants(probe, chunks)
+    return _hamming_pairs(
+        buckets.key_pairs(probe, partners, ["chunk", "val"]), max_hamming
     )
 
 
@@ -2074,9 +1965,9 @@ def simhash_incremental_pairs(
     new (within-batch pairs oriented id1 < id2) — EXACTLY the
     new-doc-involving subset of :func:`simhash_candidate_pairs` over
     the union (same pigeonhole guarantee: any pair within hamming ≤
-    chunks-1 shares an exact chunk; same ``max_bucket`` hot-bucket
-    cap, counted over batch ∪ index so the subset invariant holds
-    cap-for-cap; id namespaces must not collide — caller contract).
+    chunks-1 shares an exact chunk; same :mod:`.buckets` cap, counted
+    over batch ∪ index so the subset invariant holds cap-for-cap; id
+    namespaces must not collide — caller contract).
 
     ``piece_radius=1`` (r12): the same multi-index extension as
     :func:`simhash_candidate_pairs` — the BATCH side (the small frame)
@@ -2091,38 +1982,13 @@ def simhash_incremental_pairs(
         )
     p_new = _simhash_pieces(new_fps, chunks).localCheckpoint(eager=False)
     p_idx = _simhash_pieces(index_fps, chunks).localCheckpoint(eager=False)
-    right = (
-        p_idx.withColumn("_idx", F.lit(True))
-        .unionAll(p_new.withColumn("_idx", F.lit(False)))
-        .withColumnsRenamed({"id": "id2", "sh64": "h2"})
+    probe, partners = buckets.drop_hot_keys(
+        p_new, ["chunk", "val"], max_bucket, index=p_idx
     )
-    if max_bucket is not None:
-        hot = _hot_buckets(
-            right, max_bucket, keys=("chunk", "val")
-        ).localCheckpoint(eager=False)
-        p_new = p_new.join(hot, ["chunk", "val"], "left_anti")
-        right = right.join(hot, ["chunk", "val"], "left_anti")
-    left = p_new.withColumnsRenamed({"id": "id1", "sh64": "h1"})
     if piece_radius == 1:
-        base, extra = divmod(SIMHASH_BITS, chunks)
-        variants = F.expr(
-            f"concat(array(val), transform(sequence(0, {base} - 1 + "
-            f"(CASE WHEN chunk < {extra} THEN 1 ELSE 0 END)), "
-            "i -> val ^ shiftleft(CAST(1 AS BIGINT), i)))"
-        )
-        left = left.select(
-            "id1", "h1", "chunk", F.explode(variants).alias("val")
-        )
-    return (
-        left.join(right, ["chunk", "val"])
-        .filter(F.col("_idx") | (F.col("id1") < F.col("id2")))
-        .select(
-            "id1",
-            "id2",
-            F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+        probe = _piece_variants(probe, chunks)
+    return _hamming_pairs(
+        buckets.key_pairs(probe, partners, ["chunk", "val"]), max_hamming
     )
 
 
@@ -2546,8 +2412,8 @@ def simhash_verified_pairs(
     earns its keep as the cheapest near-exact-duplicate screen. At
     true corpus scale the radius floor costs in-bucket volume
     (n²/2^w with w pinned at 4 bits) and ``max_bucket`` becomes the
-    bound — the cap's weakest-candidates-first recall contract
-    (:func:`simhash_candidate_pairs`) is then the operative one.
+    bound — the :mod:`.buckets` cap's recall contract is then the
+    operative one.
 
     ``n_docs`` skips the sizing ``count()`` when the caller already
     holds the corpus size. ``piece_radius`` (r13, threaded to
@@ -2630,10 +2496,7 @@ def simhash_verified_pairs(
     # that actually predicted r12's cost. One aggregation over the
     # checkpointed pieces frame.
     pieces = _simhash_pieces(fps, chunks).localCheckpoint(eager=False)
-    capped = pieces
-    if max_bucket is not None:
-        hot = _hot_buckets(pieces, max_bucket, keys=("chunk", "val"))
-        capped = pieces.join(hot, ["chunk", "val"], "left_anti")
+    capped, _ = buckets.drop_hot_keys(pieces, ["chunk", "val"], max_bucket)
     est = (
         capped.groupBy("chunk", "val")
         .agg(F.count(F.lit(1)).alias("m"))
@@ -2647,27 +2510,10 @@ def simhash_verified_pairs(
     if est > _SIMHASH_DENSE_FACTOR * n_docs:
         # template-compressed regime: screenless exact verification +
         # hamming post-filter (see PLAN CHOICE above). hashed_postings
-        # already returns a checkpointed frame — _checkpointed_once
+        # already returns a checkpointed frame — checkpointed_once
         # avoids storing a second copy of the corpus postings
-        p = _checkpointed_once(postings)
-        sizes = p.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-        inter = (
-            p.select(F.col("id").alias("id1"), "sh")
-            .join(p.select(F.col("id").alias("id2"), "sh"), "sh")
-            .filter(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        jac = (
-            inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-            .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-            .withColumn(
-                "jaccard",
-                F.col("n_common").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("n_common")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        p = buckets.checkpointed_once(postings)
+        jac = buckets.key_set_jaccard(p, ["sh"]).filter(F.col("jaccard") >= threshold)
         # the hamming screen, applied to the tiny verified relation:
         # two fingerprint lookups (AQE broadcasts the 16-byte/doc fps
         # frame) instead of a 3M-row candidate join

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import dedup
+from . import buckets, dedup
 from .textstats import winnow_marked
 
 
@@ -68,30 +68,18 @@ def winnow_overlap_pairs(
         .distinct()
     )
     sel = sel.localCheckpoint(eager=False)  # sizes + both join sides
-    if max_df is not None:
-        df_counts = sel.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
-        sel = sel.join(df_counts.filter(F.col("_df") <= max_df), "h", "left_semi")
-    sizes = sel.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = sel.select(F.col("id").alias("id1"), "h")
-    b = sel.select(F.col("id").alias("id2"), "h")
-    shared = (
-        a.join(b, "h")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    sel, _ = buckets.drop_hot_keys(sel, ["h"], max_df)
     return (
-        shared.join(sizes.withColumnsRenamed({"id": "id1", "n_fp": "n_fp1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_fp": "n_fp2"}), "id2")
+        buckets.key_set_jaccard(sel, ["h"])
+        .filter(F.col("n_common") >= min_shared)
         .select(
             "id1",
             "id2",
-            "n_shared",
-            "n_fp1",
-            "n_fp2",
-            (F.col("n_shared").cast("double") / F.col("n_fp1")).alias("overlap1"),
-            (F.col("n_shared").cast("double") / F.col("n_fp2")).alias("overlap2"),
+            F.col("n_common").alias("n_shared"),
+            F.col("n1").alias("n_fp1"),
+            F.col("n2").alias("n_fp2"),
+            (F.col("n_common").cast("double") / F.col("n1")).alias("overlap1"),
+            (F.col("n_common").cast("double") / F.col("n2")).alias("overlap2"),
         )
     )
 
@@ -111,32 +99,14 @@ def containment_pairs(
     different their sizes (the case Jaccard structurally cannot
     reach). Pairs at ``containment ≥ threshold``; pass ``toks`` to
     share the dedup family's tokenize scan."""
-    postings = dedup.hashed_postings(docs, text_col, id_col, n, toks=toks)
-    if max_df is not None:
-        df_counts = postings.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
-        postings = postings.join(
-            df_counts.filter(F.col("_df") <= max_df), "sh", "left_semi"
-        )
-    sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = postings.select(F.col("id").alias("id1"), "sh")
-    b = postings.select(F.col("id").alias("id2"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    postings, _ = buckets.drop_hot_keys(
+        dedup.hashed_postings(docs, text_col, id_col, n, toks=toks), ["sh"], max_df
     )
     return (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
+        buckets.key_set_jaccard(postings, ["sh"])
         .withColumn(
             "containment",
             F.col("n_common").cast("double") / F.least(F.col("n1"), F.col("n2")),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
         )
         .filter(F.col("containment") >= threshold)
         .select("id1", "id2", "n_common", "n1", "n2", "containment", "jaccard")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors as vx
 from ..functions.litarrays import lit_doubles
+from . import buckets
 
 
 def _with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -229,11 +230,9 @@ def lsh_neardup_pairs(
     candidates approach all-pairs; that regime is inherent to the
     similarity level, not the plan.
 
-    ``max_bucket`` (r13, default off to preserve the exact-recall
-    contract above) drops (rot, bucket) keys whose population exceeds
-    it before the self-join — the same hot-bucket guard as
-    ``dedup.lsh_candidate_pairs`` for corpora with boilerplate
-    clusters, and the cap the incremental form
+    ``max_bucket`` (r13, default off) drops (rot, bucket) keys whose
+    population exceeds it before the self-join — the :mod:`.buckets`
+    cap (recall contract there), which the incremental form
     (:func:`lsh_neardup_incremental`) mirrors count-for-count."""
     # Materialize the sketches EAGERLY: both self-join sides consume
     # them, and the 64-aggregate sketch tree is expensive for Catalyst —
@@ -243,16 +242,8 @@ def lsh_neardup_pairs(
     # dedup.hashed_postings.)
     sk = hyperplane_sketches(embeddings, planes, rotations, id_col, vec_col)
     sk = sk.localCheckpoint(eager=True)
-    if max_bucket is not None:
-        from .dedup import _hot_buckets
-
-        hot = _hot_buckets(sk, max_bucket, keys=("rot", "bucket"))
-        sk = sk.join(hot, ["rot", "bucket"], "left_anti")
-    a = sk.select(F.col("id").alias("id1"), "rot", "bucket")
-    b = sk.select(F.col("id").alias("id2"), "rot", "bucket")
     cands = (
-        a.join(b, ["rot", "bucket"])
-        .filter(F.col("id1") < F.col("id2"))
+        buckets.bucket_pairs(sk, ["rot", "bucket"], max_bucket)
         .select("id1", "id2")
         .distinct()
     )
@@ -370,10 +361,8 @@ def lsh_neardup_incremental(
       into the caller's generation publish).
 
     ``max_bucket`` caps hot (rot, bucket) keys counted over the
-    COMBINED batch ∪ index population — exactly the counts the
-    full-corpus run sees, so the subset invariant holds cap-for-cap
-    (a boilerplate cluster in the index would otherwise make every
-    colliding batch pay an O(|cluster|·|batch∩bucket|) join).
+    COMBINED batch ∪ index population, so the subset invariant holds
+    cap-for-cap (recall contract: :mod:`.buckets`).
 
     ``new_sketches`` (a :func:`hyperplane_sketches` frame for the
     batch, same ``planes``/``rotations``) skips the batch sketch pass
@@ -381,46 +370,25 @@ def lsh_neardup_incremental(
     ``new_postings``: a caller that also persists the batch's
     sketches (the ingest loop's state delta) computes them ONCE and
     feeds both uses."""
-    from .dedup import _checkpointed_once, _hot_buckets
-
     sk_new = (
         # caller-injected frames are often already eager checkpoints —
-        # _checkpointed_once skips the redundant second materialization
-        _checkpointed_once(new_sketches)
+        # checkpointed_once skips the redundant second materialization
+        buckets.checkpointed_once(new_sketches)
         if new_sketches is not None
         else hyperplane_sketches(
             new_embeddings, planes, rotations, id_col, vec_col
         ).localCheckpoint(eager=False)
     )
     # ONE join covers both candidate classes (the minhash_lsh_incremental
-    # shape): right side is index ∪ batch with an _idx flag — index
-    # collisions keep every orientation (disjoint namespaces), batch
-    # collisions keep id1 < id2.
-    banded_new = sk_new
-    right = (
-        index_sketches.withColumn("_idx", F.lit(True))
-        .unionByName(sk_new.withColumn("_idx", F.lit(False)))
-        .withColumnRenamed("id", "id2")
-    )
-    if max_bucket is not None:
-        hot = _hot_buckets(
-            right.select(F.col("id2").alias("id"), "rot", "bucket"),
-            max_bucket,
-            keys=("rot", "bucket"),
-        ).localCheckpoint(eager=False)
-        banded_new = banded_new.join(hot, ["rot", "bucket"], "left_anti")
-        right = right.join(hot, ["rot", "bucket"], "left_anti")
+    # shape): the batch probes index ∪ batch
     cands = (
-        banded_new.withColumnRenamed("id", "id1")
-        .join(right, ["rot", "bucket"])
+        buckets.bucket_pairs(
+            sk_new, ["rot", "bucket"], max_bucket, index=index_sketches
+        )
         # id1 != id2 defends against a violated id-namespace contract
         # (an id present in BOTH batch and index would otherwise emit
-        # a self-pair the full-corpus run never produces); within
-        # batch, keep id1 < id2
-        .filter(
-            (F.col("id1") != F.col("id2"))
-            & (F.col("_idx") | (F.col("id1") < F.col("id2")))
-        )
+        # a self-pair the full-corpus run never produces)
+        .filter(F.col("id1") != F.col("id2"))
         .select("id1", "id2")
         .distinct()
     )
@@ -1095,11 +1063,8 @@ def semantic_neardup_pairs(
         embeddings, n_centroids, id_col, vec_col
     )
     assign = _nearest_centroids(embeddings, cents, n_assign, id_col, vec_col)
-    a = assign.select(F.col("id").alias("id1"), "cidx")
-    b = assign.select(F.col("id").alias("id2"), "cidx")
     cands = (
-        a.join(b, "cidx")
-        .filter(F.col("id1") < F.col("id2"))
+        buckets.bucket_pairs(assign, ["cidx"])
         .select("id1", "id2")
         .distinct()
     )

@@ -106,9 +106,7 @@ E7_COUNTERS = (
 MAX_LEADERBOARD_ROWS = 1000  # one API page — the REST source's hard cap
 
 
-def top_players_df(
-    leaderboard: DataFrame, top_n: int, max_rows: int = MAX_LEADERBOARD_ROWS
-) -> DataFrame:
+def top_players_df(leaderboard: DataFrame, top_n: int) -> DataFrame:
     """Leaderboard → player dim (scripts/etl_snapshot_topn.py:203-216).
 
     Mirrors the reference's two edge behaviors exactly: the positional
@@ -123,15 +121,13 @@ def top_players_df(
     a leaderboard is one API page (≤1000 rows) by construction. That
     contract is now ENFORCED, not assumed: a table-scale input would
     silently serialize the whole dataset through one task, so we scan at
-    most max_rows+1 rows (cheap — limit pushes into the scan) and refuse
-    anything larger. Pass a bigger ``max_rows`` deliberately if a future
-    source genuinely pages beyond 1000.
+    most ``MAX_LEADERBOARD_ROWS + 1`` rows (cheap — limit pushes into the
+    scan) and refuse anything larger.
     """
-    if leaderboard.limit(max_rows + 1).count() > max_rows:
+    if leaderboard.limit(MAX_LEADERBOARD_ROWS + 1).count() > MAX_LEADERBOARD_ROWS:
         raise ValueError(
-            f"leaderboard exceeds {max_rows} rows; top_players_df ranks in a "
-            "single-partition window sized for one API page — raise max_rows "
-            "explicitly if this input is intentional"
+            f"leaderboard exceeds {MAX_LEADERBOARD_ROWS} rows; top_players_df "
+            "ranks in a single-partition window sized for one API page"
         )
     w = Window.orderBy(F.col("rank").asc_nulls_last(), F.col("tag"))
     return (

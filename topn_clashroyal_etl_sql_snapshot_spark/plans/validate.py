@@ -170,9 +170,9 @@ def validation_report(
         out.append(
             labeled(
                 f"fk:{child}.{ck}->{parent}.{pk}",
-                c.join(
-                    p.select(F.col(pk).alias(ck)).distinct(), ck, "left_anti"
-                ).agg(F.count(F.lit(1)).alias("violations")),
+                c.join(p.select(F.col(pk).alias(ck)), ck, "left_anti").agg(
+                    F.count(F.lit(1)).alias("violations")
+                ),
             )
         )
     report = out[0]
